@@ -4,13 +4,18 @@ Prints the full result JSON line (queries + groups maps) first, then a
 COMPACT summary as the FINAL stdout line:
   {"metric": ..., "value": total_sec, "unit": "sec", "n_queries": N,
    "n_groups": G, "queries_total": Q, "groups_total": B, "sf": ...,
-   "detail": "BENCH_DETAIL.json"}
+   "cpus": C, "detail": "BENCH_DETAIL.json"}
 The full per-query/per-group maps are also written to the sidecar file
 ``BENCH_DETAIL.json`` next to this script.  Rationale: the driver's
 bench capture keeps only a 2000-char stdout tail — a ~218-entry query
 map overflows it and the official record parsed as null for six
 straight rounds.  The compact last line always fits the tail; the
 sidecar (committed with the round) carries the machine-readable detail.
+Only the committed configuration, 32 cores at sf0.1, writes
+``BENCH_DETAIL.json``; any other writes ``BENCH_DETAIL_c{cpus}_sf{sf}.json``
+so a side run never overwrites the committed artifact, and
+``SPARK_GRAFT_BENCH_DETAIL_OUT`` names the file explicitly.  ``cpus`` is
+the Spark session's default parallelism.
 
 Each query is fully executed (count + collect of a bounded head) so
 lazy plans can't cheat; per-query wall time includes planning +
@@ -74,6 +79,7 @@ def main() -> None:
     total = round(sum(per_query.values()) + sum(groups.values()), 4)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    cpus = spark.sparkContext.defaultParallelism
     out = {
         "metric": "huracan_spark_query_suite",
         "value": total,
@@ -81,6 +87,7 @@ def main() -> None:
         "queries": per_query,
         "groups": groups,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
     }
     if repeat > 1:
         out["repeat"] = repeat
@@ -90,12 +97,13 @@ def main() -> None:
     # The sidecar write must NEVER prevent the final summary line — a
     # disk-full/read-only failure here would reproduce the exact
     # truncated-record problem the summary line exists to fix.
-    # SPARK_GRAFT_BENCH_DETAIL_OUT redirects the sidecar so scaling /
-    # smoke runs can't clobber the committed sf0.1 artifact (r10
-    # VERDICT item 6; the driver's 8-core run overwrote it in r10).
-    # Default unchanged — the committed artifact name stays stable.
+    # Only the committed configuration (32 cores, sf0.1) writes
+    # BENCH_DETAIL.json: an 8-core run overwrote it in r10.
     detail_name = os.environ.get(
-        "SPARK_GRAFT_BENCH_DETAIL_OUT", "BENCH_DETAIL.json"
+        "SPARK_GRAFT_BENCH_DETAIL_OUT",
+        "BENCH_DETAIL.json"
+        if (cpus, out["sf"]) == (32, 0.1)
+        else f"BENCH_DETAIL_c{cpus}_sf{sf}.json",
     )
     try:
         detail_path = (
@@ -118,6 +126,7 @@ def main() -> None:
         "queries_total": round(sum(per_query.values()), 4),
         "groups_total": round(sum(groups.values()), 4),
         "sf": out["sf"],
+        "cpus": cpus,
         "detail": detail_name,
     }
     if repeat > 1:

@@ -1,24 +1,28 @@
 """Incremental view maintenance over the silver table's change feed.
 
 A downstream aggregate (per-group COUNT / SUM over the silver current
-state) stays correct WITHOUT rescanning the table: each merge's change
-feed (``SilverTable.diff`` — cost proportional to the delta, not the
-table) is folded into the materialized view as +new/-old adjustments.
+state) stays correct WITHOUT rescanning the table: each commit's change
+rows are folded into the materialized view as +new/-old adjustments.
 This is the lakehouse "materialized view maintained from CDF" pattern
 (the reference recomputes its stats queries from scratch each call —
 SURVEY §2.6); at 100 TB the full-state rollup is a one-time backfill
 and every subsequent refresh touches only changed buckets.
 
-Delta semantics per change row:
-- insert:  +new payload
-- update:  -old payload, +new payload
-- delete:  -old payload (tombstones carry no live payload)
-- drop:    impossible by K2 (delete-is-final keeps keys forever);
-           surfaced by ``diff`` and refused here so corruption can't
-           fold silently.
+``fold_changes`` is the one fold.  It takes change rows in the CDF
+stream's vocabulary (``sources/silver_cdf_source.py``, preimages on)
+and signs each row's payload:
 
-The view is itself a tiny grouped table — refresh is a join-free
-union + re-aggregate over |groups| + |delta| rows.
+- ``insert`` / ``update_postimage``              -> +1 row, +value
+- ``update_preimage`` / ``delete_preimage`` / ``drop`` (the vanished
+  key's old payload, e.g. after a RESTORE)      -> -1 row, -value
+- ``delete`` (tombstone postimage)              -> 0
+
+Tombstone payloads carry no live mass and are filtered first.  The
+gold stream (``streaming/gold_view.py``) folds its micro-batches with
+it; ``refresh_view`` folds the batch ``SilverTable.diff`` between two
+generations with it.  The view is itself a tiny grouped table, so a
+refresh is a join-free union + re-aggregate over |groups| + |delta|
+rows.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from pyspark.sql import functions as F
 
 from huracan_spark.pipeline.silver import SilverTable
 
-__all__ = ["grouped_view", "refresh_view"]
+__all__ = ["fold_changes", "grouped_view", "refresh_view"]
 
 
 def grouped_view(state: DataFrame, group_col: str, value_col: str) -> DataFrame:
@@ -45,6 +49,44 @@ def grouped_view(state: DataFrame, group_col: str, value_col: str) -> DataFrame:
     )
 
 
+def fold_changes(
+    view: DataFrame | None,
+    changes: DataFrame,
+    group_col: str,
+    value_col: str,
+) -> DataFrame:
+    """``view`` (None = empty) plus the signed live payloads of the
+    ``changes`` rows (``_change_type``, ``deleted``, group and value
+    columns), re-aggregated per group; groups whose count reaches zero
+    are removed."""
+    ct = F.col("_change_type")
+    sign = (
+        F.when(ct.isin("insert", "update_postimage"), F.lit(1))
+        .when(ct.isin("update_preimage", "delete_preimage", "drop"), F.lit(-1))
+        .cast("long")
+    )
+    adj = (
+        changes.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
+        .select(group_col, sign.alias("n_rows"), value_col)
+        .filter(F.col("n_rows").isNotNull())
+        .select(
+            group_col,
+            "n_rows",
+            (F.col(value_col) * F.col("n_rows")).alias("sum_value"),
+        )
+    )
+    if view is not None:
+        adj = view.select(group_col, "n_rows", "sum_value").unionByName(adj)
+    return (
+        adj.groupBy(group_col)
+        .agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("sum_value").alias("sum_value"),
+        )
+        .filter(F.col("n_rows") > 0)
+    )
+
+
 def refresh_view(
     view: DataFrame,
     silver: SilverTable,
@@ -55,73 +97,32 @@ def refresh_view(
 ) -> DataFrame:
     """Fold the gen_old -> gen_new change feed into ``view``.
 
-    Reads ONLY the changed buckets (via ``SilverTable.diff`` keys
-    joined back to the new/old generation bucket reads for payloads),
-    emits per-group adjustment rows (+new, -old), unions them with the
-    current view and re-aggregates — |groups| + |delta| rows total,
-    never a table scan.  Groups whose count drops to zero are removed.
-    """
+    Reads ONLY the changed buckets: ``SilverTable.diff`` names the
+    changed keys, whose old rows become preimages (``drop`` for a key
+    that vanished) and whose new rows become postimages, all folded by
+    ``fold_changes`` — never a table scan."""
     cdf = silver.diff(gen_old, gen_new)
     if cdf is None:
         return view
-    bad = cdf.filter(F.col("change_type") == "drop")
-    if bad.limit(1).count():
-        raise ValueError(
-            "change feed contains 'drop' rows — silver state lost keys, "
-            "refusing to fold a corrupt delta into the view"
-        )
-    cols = ["_id", group_col, value_col, "deleted"]
-    changed = silver.changed_buckets(gen_old, gen_new)
-    # _bucket_state reconciles merge-on-read deltas and maps physical
-    # column names back to logical (column-mapping tables)
-    new_df = silver._bucket_state(gen_new, changed)
-    old_df = silver._bucket_state(gen_old, changed)
-    if new_df is None and old_df is None:
-        return view
-    new_state = (
-        new_df.select(*cols)
-        if new_df is not None
-        else old_df.select(*cols).limit(0)
-    )
-    old_state = (
-        old_df.select(*cols)
-        if old_df is not None
-        else new_state.limit(0)
-    )
-
     keys = cdf.select("_id", "change_type")
-    live = ~F.coalesce(F.col("deleted"), F.lit(False))
-    plus = (
-        new_state.join(keys, "_id")
-        .filter(F.col("change_type").isin("insert", "update", "delete") & live)
-        .select(
-            group_col,
-            F.lit(1).cast("long").alias("d_rows"),
-            F.col(value_col).alias("d_value"),
-        )
+    changed = silver.changed_buckets(gen_old, gen_new)
+    cols = ["_id", group_col, value_col, "deleted"]
+    kind = F.col("change_type")
+    pre = F.when(kind == "drop", kind).otherwise(
+        F.concat(kind, F.lit("_preimage"))
     )
-    minus = (
-        old_state.join(keys, "_id")
-        .filter(F.col("change_type").isin("update", "delete") & live)
-        .select(
-            group_col,
-            F.lit(-1).cast("long").alias("d_rows"),
-            (-F.col(value_col)).alias("d_value"),
+    post = F.when(kind == "update", F.lit("update_postimage")).otherwise(kind)
+    changes = None
+    for gen, label in ((gen_old, pre), (gen_new, post)):
+        # _bucket_state reconciles merge-on-read deltas and maps
+        # physical column names back to logical (column mapping)
+        state = silver._bucket_state(gen, changed)
+        if state is None:
+            continue
+        side = state.select(*cols).join(keys, "_id").select(
+            group_col, value_col, "deleted", label.alias("_change_type")
         )
-    )
-    adj = plus.unionByName(minus)
-    folded = (
-        view.select(
-            group_col,
-            F.col("n_rows").alias("d_rows"),
-            F.col("sum_value").alias("d_value"),
-        )
-        .unionByName(adj)
-        .groupBy(group_col)
-        .agg(
-            F.sum("d_rows").alias("n_rows"),
-            F.sum("d_value").alias("sum_value"),
-        )
-        .filter(F.col("n_rows") > 0)
-    )
-    return folded
+        changes = side if changes is None else changes.unionByName(side)
+    if changes is None:
+        return view
+    return fold_changes(view, changes, group_col, value_col)

@@ -37,21 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from huracan_spark.operators.compaction import latest_state, merge_into
-from huracan_spark.pipeline import bloom, skipping
-from huracan_spark.pipeline.features import READER_FEATURES
+from huracan_spark.pipeline import bloom, commitlog, skipping
 
 __all__ = ["SilverTable", "MergeMetrics", "CommitConflict", "ConstraintViolation"]
-
-#: parsed-manifest cache keyed by (abs path, mtime_ns, size): a single
-#: merge used to parse the SAME manifest JSON 3-5x (manifest / deltas /
-#: dvs / colmap / table_schema each re-opened it), and at production
-#: bucket counts the stats/fstats maps make these parses real driver
-#: cost per commit.  mtime+size keying keeps rewrites (rebase rewrites
-#: a claimed generation's manifest in place) correctly invalidated.
-#: Consumers treat the parsed dict as read-only (audited: every writer
-#: copies sub-dicts before mutating).
-_MANIFEST_CACHE: dict[tuple[str, int, int], dict] = {}
-_MANIFEST_CACHE_MAX = 64
 
 
 class ConstraintViolation(ValueError):
@@ -109,12 +97,14 @@ class SilverTable:
         self.n_buckets = persisted if persisted is not None else n_buckets
 
     def _persisted_n_buckets(self) -> int | None:
+        # layout metadata, read ungated: a handle on a table with an
+        # unknown reader feature still opens, and its first row read
+        # refuses loudly
         gen = self.current_generation()
         if gen is None:
             return None
         try:
-            with open(os.path.join(self.path, gen, "manifest.json")) as f:
-                return json.load(f).get("n_buckets")
+            return commitlog.load(self.path, gen).get("n_buckets")
         except FileNotFoundError:
             return None
 
@@ -239,10 +229,7 @@ class SilverTable:
                 self._release_commit_lock(lock)
 
     def current_generation(self) -> str | None:
-        if not os.path.exists(self._pointer):
-            return None
-        with open(self._pointer) as f:
-            return json.load(f)["generation"]
+        return commitlog.current(self.path)
 
     def generations(self) -> list[str]:
         """All persisted state generations, oldest first (S7 time travel:
@@ -255,7 +242,7 @@ class SilverTable:
 
     def manifest(self, generation: str) -> dict[str, str]:
         """bucket id (str) -> data dir relative to the table root."""
-        return self._manifest_json(generation)["buckets"]
+        return commitlog.load(self.path, generation)["buckets"]
 
     def history(self) -> list[dict]:
         """Commit log, newest first (the DESCRIBE HISTORY analog): one
@@ -266,8 +253,7 @@ class SilverTable:
         out = []
         for g in reversed(self.generations()):
             try:
-                with open(os.path.join(self.path, g, "manifest.json")) as f:
-                    m = json.load(f)
+                m = commitlog.load(self.path, g)
             except FileNotFoundError:
                 continue
             entry = {"generation": g}
@@ -321,15 +307,9 @@ class SilverTable:
         bytes are unchanged — those buckets are skipped without being
         read.  This is the Delta/Iceberg change-data-feed file-skipping
         trick expressed over plain parquet manifests."""
-        mo, mn = self.manifest(gen_old), self.manifest(gen_new)
-        do, dn = self.deltas(gen_old), self.deltas(gen_new)
-        vo, vn = self.dvs(gen_old), self.dvs(gen_new)
-        return sorted(
-            b
-            for b in set(mo) | set(mn) | set(do) | set(dn) | set(vo) | set(vn)
-            if mo.get(b) != mn.get(b)
-            or do.get(b) != dn.get(b)
-            or vo.get(b) != vn.get(b)
+        return commitlog.changed_buckets(
+            commitlog.refs(self.path, gen_old),
+            commitlog.refs(self.path, gen_new),
         )
 
     def diff(self, gen_old: str, gen_new: str) -> DataFrame | None:
@@ -414,7 +394,7 @@ class SilverTable:
         at the current one.  Cost scales with the deltas (each pairwise
         diff reads only changed buckets), not with table size × commits.
         Returns None when the range holds no changes."""
-        gens = [g for g in self.generations() if self._has_manifest(g)]
+        gens = commitlog.generations(self.path)
         if end_gen is None:
             end_gen = self.current_generation()
         if end_gen not in gens:
@@ -441,11 +421,6 @@ class SilverTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
-
-    def _has_manifest(self, generation: str) -> bool:
-        return os.path.exists(
-            os.path.join(self.path, generation, "manifest.json")
-        )
 
     # -- data skipping (Delta file-stats analog) -------------------------
 
@@ -1195,7 +1170,7 @@ class SilverTable:
         if gen is None:
             return None
         try:
-            sj = self._manifest_json(gen).get("schema")
+            sj = commitlog.load(self.path, gen).get("schema")
         except FileNotFoundError:
             return None
         if sj is None:
@@ -2076,15 +2051,6 @@ class SilverTable:
         fields = [f for f in df.schema.fields if f.name != "_bucket"]
         return json.dumps(StructType(fields).jsonValue())
 
-    #: reader features this code understands (Delta protocol
-    #: readerFeatures parity).  A manifest stamped with a feature
-    #: OUTSIDE this set was written by newer code whose generations
-    #: this reader would silently misread (e.g. a pre-DV reader would
-    #: return deleted rows as live) — refuse loudly instead.  Shared
-    #: with the CDF streaming source's pure-Python manifest loaders
-    #: (pipeline/features.py) so both gates can never drift apart.
-    _READER_FEATURES = READER_FEATURES
-
     @staticmethod
     def _stamp_features(mf: dict) -> dict:
         feats = []
@@ -2104,28 +2070,8 @@ class SilverTable:
         with open(os.path.join(gen_dir, "manifest.json"), "w") as f:
             json.dump(self._stamp_features(mf), f)
 
-    def _manifest_json(self, generation: str) -> dict:
-        """Parsed manifest of ``generation`` (no feature gate), served
-        from the mtime/size-keyed parse cache.  Raises FileNotFoundError
-        exactly like the direct open it replaces."""
-        p = os.path.join(self.path, generation, "manifest.json")
-        st = os.stat(p)  # FileNotFoundError propagates, as before
-        key = (p, st.st_mtime_ns, st.st_size)
-        raw = _MANIFEST_CACHE.get(key)
-        if raw is None:
-            with open(p) as f:
-                raw = json.load(f)
-            while len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX:
-                _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-            _MANIFEST_CACHE[key] = raw
-        return raw
-
     def _manifest_raw(self, generation: str) -> dict:
-        from huracan_spark.pipeline.features import check_reader_features
-
-        return check_reader_features(
-            self._manifest_json(generation), generation
-        )
+        return commitlog.manifest(self.path, generation)
 
     @staticmethod
     def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -2732,8 +2678,7 @@ class SilverTable:
         CAS again.  Anything else (overlapping buckets, OPTIMIZE/
         RESTORE in between, schema drift) returns False and the caller
         falls back to a full re-merge."""
-        with open(os.path.join(out, "manifest.json")) as f:
-            ours = json.load(f)
+        ours = commitlog.load(self.path, gen)
         snap = self._manifest_raw(read_gen) if read_gen else {}
         for _ in range(max_attempts):
             winner = self.current_generation()

@@ -6,17 +6,21 @@ Delta exposes ``spark.readStream.format("delta").option(
 the commit log.  SilverTable's generation manifests carry the same
 information, surfaced here through Spark 4's Python DataSource API:
 
-- stream OFFSETS are generation names (the commit log positions);
-- each micro-batch covers the generation pairs committed since the
-  last offset, and fans out one ``InputPartition`` PER CHANGED BUCKET
-  per pair — executors read only the delta's buckets in parallel
-  (manifest file-skipping, `pipeline/silver.py::changed_buckets`),
-  so a batch costs the delta, not the table;
+- stream OFFSETS are generation names (the commit log positions,
+  read through ``pipeline/commitlog.py`` like every other reader);
+- each micro-batch covers the generations committed since the last
+  offset and plans ONE ``InputPartition`` PER CHANGED BUCKET for the
+  whole range (manifest file-skipping, ``commitlog.changed_buckets``),
+  so a batch costs the delta, not the table.  A partition walks its
+  bucket's chain of changing generations, loading each state once and
+  diffing it against the previous one; before the first generation of
+  an ``earliest`` stream the state is empty;
 - partition reads are pure pyarrow/stdlib (no SparkSession on the
   executor), classify changes exactly like ``SilverTable.diff``
-  (insert / update / delete, plus ``drop`` for audit-visibility of
-  impossible new-side nulls), and include equal-version tombstone
-  flips;
+  (insert / update / delete, plus ``drop`` when a key vanishes, e.g.
+  after a RESTORE), and include equal-version tombstone flips.  A
+  ``drop`` row carries the key's OLD payload, like a preimage, so a
+  folded aggregate can take back its mass;
 - replaying a committed offset range after restart re-reads the same
   immutable generation files — replay-stable by construction (the
   property the K1 idempotent-MERGE sink assumes).  Vacuum keeps every
@@ -44,21 +48,9 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from huracan_spark.pipeline.features import check_reader_features
+from huracan_spark.pipeline import commitlog
 
 __all__ = ["SilverCdfStreamDataSource", "register_silver_cdf_source"]
-
-
-def _manifest(path: str, gen: str) -> dict:
-    """Parse one generation's manifest WITH the reader feature gate —
-    the CDF source must refuse unknown-feature manifests exactly like
-    ``SilverTable._manifest_raw`` does, or a future-feature commit a
-    batch reader refuses would be silently misread by the stream (the
-    precise failure mode the gate exists to prevent)."""
-    with open(os.path.join(path, gen, "manifest.json")) as f:
-        raw = json.load(f)
-    return check_reader_features(raw, gen)
-
 
 # metadata columns appended after the table's own columns — the Delta
 # CDF shape (_change_type + commit info), plus the pre-image version
@@ -71,10 +63,10 @@ def _table_ddl(path: str) -> str:
     """DDL of the table's committed schema + CDF metadata columns.
     Read from the CURRENT generation's manifest at stream start; rows
     from generations predating an evolved column null-fill it."""
-    gen = _current(path)
+    gen = commitlog.current(path)
     if gen is None:
         raise ValueError(f"silver table at {path!r} has no committed state")
-    sj = _manifest(path, gen).get("schema")
+    sj = commitlog.manifest(path, gen).get("schema")
     if sj is None:
         # pre-schema-manifest table: minimal envelope
         cols = "_id string, version_ bigint, deleted boolean"
@@ -88,57 +80,14 @@ def _table_ddl(path: str) -> str:
     return f"{cols}, {_META_DDL}"
 
 
-def _gens(path: str) -> list[str]:
-    """Committed generations, oldest first (manifest-less in-flight
-    dirs excluded) — pure file IO, callable on driver or executor."""
-    if not os.path.isdir(path):
-        return []
-    return sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith("gen-")
-        and os.path.isfile(os.path.join(path, d, "manifest.json"))
-    )
-
-
-def _manifest_refs(path: str, gen: str) -> tuple[dict, dict, dict]:
-    """(bucket -> base rel, bucket -> [delta rels], bucket -> [dv rels])
-    for one commit — merge-on-read generations carry per-bucket delta
-    layers that must reconcile before the diff, and deletion-vector
-    generations carry position sidecars that overlay as tombstones."""
-    raw = _manifest(path, gen)
-    return raw["buckets"], raw.get("deltas", {}), raw.get("dvs", {})
-
-
-def _current(path: str) -> str | None:
-    ptr = os.path.join(path, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as f:
-        return json.load(f)["generation"]
-
-
-def _colmap(path: str) -> dict | None:
-    """The CURRENT generation's logical->physical column map (column
-    mapping tables).  Physical names are immutable, so one map taken at
-    stream start decodes files from every generation."""
-    gen = _current(path)
-    if gen is None:
-        return None
-    return _manifest(path, gen).get("colmap")
-
-
 class _CdfPartition(InputPartition):
-    def __init__(
-        self, table_path, gen, old_refs, new_refs, columns, preimages,
-        colmap=None,
-    ):
+    def __init__(self, table_path, old_refs, steps, columns, preimages, colmap):
         self.table_path = table_path
-        self.gen = gen  # the generation whose commit produced the change
-        # each side is (base rel | None, [delta rels], [dv rels]) —
-        # None base with no deltas = the bucket does not exist there
+        # the bucket's refs before the batch, then (generation, refs)
+        # for each generation in the batch that changed the bucket;
+        # refs are commitlog.bucket_refs triples
         self.old_refs = old_refs
-        self.new_refs = new_refs
+        self.steps = steps
         self.columns = columns  # LOGICAL table column names, schema order
         self.preimages = preimages
         self.colmap = colmap  # logical -> physical (column mapping)
@@ -221,6 +170,38 @@ def _load_state(table_path: str, refs, columns, colmap=None) -> dict:
     return state
 
 
+def _changes(old: dict, new: dict, cols, gen: str, preimages: bool):
+    """Change rows of one bucket between two reconciled states, with
+    the same changed-row predicate and classification as
+    ``SilverTable.diff``: version differs OR deleted differs."""
+    for _id in sorted(set(old) | set(new)):
+        o, n = old.get(_id), new.get(_id)
+        if (
+            o is not None
+            and n is not None
+            and o["version_"] == n["version_"]
+            and o["deleted"] == n["deleted"]
+        ):
+            continue
+        old_v = o["version_"] if o else None
+        if n is None:
+            # the key vanished (a RESTORE to before its insert): the
+            # row carries the old payload so folds can subtract it
+            yield tuple(o[c] for c in cols) + ("drop", old_v, gen)
+            continue
+        if o is None:
+            ct = "delete" if n["deleted"] else "insert"
+        elif n["deleted"] and not o["deleted"]:
+            ct = "delete"
+        else:
+            ct = "update"
+        if preimages and o is not None:
+            yield tuple(o[c] for c in cols) + (f"{ct}_preimage", old_v, gen)
+        if preimages and ct == "update":
+            ct = "update_postimage"
+        yield tuple(n[c] for c in cols) + (ct, old_v, gen)
+
+
 class _SilverCdfStreamReader(DataSourceStreamReader):
     def __init__(self, options, columns):
         self.path = options["path"]
@@ -244,7 +225,10 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
         # depends on the cap.
         self.max_gens = int(options.get("max_generations_per_batch", "0"))
         self._pos: str | None = None
-        self.cmap = _colmap(self.path)
+        # physical names are immutable, so the CURRENT generation's
+        # column map, taken at stream start, decodes every generation
+        cur = commitlog.current(self.path)
+        self.cmap = cur and commitlog.manifest(self.path, cur).get("colmap")
 
     def initialOffset(self) -> dict:
         if self.starting == "earliest":
@@ -253,9 +237,9 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
             # startingVersion=0 includes the initial adds), then pairs
             off = {"generation": ""}
         elif self.starting == "latest":
-            off = {"generation": _current(self.path) or ""}
+            off = {"generation": commitlog.current(self.path) or ""}
         else:
-            if self.starting not in _gens(self.path):
+            if self.starting not in commitlog.generations(self.path):
                 raise ValueError(
                     f"unknown starting generation {self.starting!r}"
                 )
@@ -264,10 +248,10 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
         return off
 
     def latestOffset(self) -> dict:
-        cur = _current(self.path) or ""
+        cur = commitlog.current(self.path) or ""
         if not self.max_gens or self._pos is None or not cur:
             return {"generation": cur}
-        gens = _gens(self.path)
+        gens = commitlog.generations(self.path)
         hi = gens.index(cur)
         if self._pos == "":
             # the initial snapshot counts as the first step
@@ -283,7 +267,7 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
         # to this batch's end (also re-seeds the position on restart,
         # when the engine replans from its checkpoint)
         self._pos = end["generation"]
-        gens = _gens(self.path)
+        gens = commitlog.generations(self.path)
         s, e = start["generation"], end["generation"]
         if not e or s == e:
             return []
@@ -293,112 +277,56 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
                 "vacuumed or corrupted past this stream's offset"
             )
         hi = gens.index(e)
-        if s and s in gens and gens.index(s) > hi:
+        if s and s not in gens:
+            # resuming from beyond the vacuum horizon must fail LOUDLY:
+            # silently skipping to the oldest surviving generation would
+            # drop committed changes
+            raise ValueError(
+                f"start generation {s!r} was vacuumed — this stream's "
+                "offset predates the table's retention window; rebuild "
+                "the consumer from a fresh 'earliest' snapshot"
+            )
+        lo = gens.index(s) if s else -1
+        if lo > hi:
             # defense in depth: an end offset BEHIND the start would
-            # regress the committed position and re-emit pairs on the
+            # regress the committed position and re-emit changes on the
             # next batch — refuse instead of silently planning it
             raise ValueError(
                 f"offset inversion: start {s!r} is ahead of end {e!r}"
             )
-        parts = []
-        if s:
-            if s not in gens:
-                # resuming from beyond the vacuum horizon must fail
-                # LOUDLY: silently skipping to the oldest surviving
-                # generation would drop committed changes
-                raise ValueError(
-                    f"start generation {s!r} was vacuumed — this "
-                    "stream's offset predates the table's retention "
-                    "window; rebuild the consumer from a fresh "
-                    "'earliest' snapshot"
+        # "" = before the first commit: the oldest generation diffs
+        # against an empty table, so its rows emit as inserts (Delta's
+        # startingVersion=0 includes the initial adds)
+        first = prev = (
+            commitlog.refs(self.path, s) if s else commitlog.EMPTY_REFS
+        )
+        steps: dict[str, list] = {}
+        for gen in gens[lo + 1 : hi + 1]:
+            cur = commitlog.refs(self.path, gen)
+            for b in commitlog.changed_buckets(prev, cur):
+                steps.setdefault(b, []).append(
+                    (gen, commitlog.bucket_refs(cur, b))
                 )
-            lo = gens.index(s)
-        else:
-            # initial snapshot: every bucket of the oldest generation
-            # diffs against nothing -> its rows emit as inserts (or
-            # deletes, for tombstones already present)
-            lo = 0
-            first = gens[0]
-            mb, md, mv = _manifest_refs(self.path, first)
-            for b in sorted(set(mb) | set(md)):
-                parts.append(
-                    _CdfPartition(
-                        self.path,
-                        first,
-                        (None, [], []),
-                        (mb.get(b), md.get(b, []), mv.get(b, [])),
-                        self.columns,
-                        self.preimages,
-                        self.cmap,
-                    )
-                )
-        for prev, cur in zip(gens[lo:hi], gens[lo + 1 : hi + 1]):
-            mo, do, vo = _manifest_refs(self.path, prev)
-            mn, dn, vn = _manifest_refs(self.path, cur)
-            for b in sorted(set(mo) | set(mn) | set(do) | set(dn) | set(vn)):
-                if (
-                    mo.get(b) != mn.get(b)
-                    or do.get(b) != dn.get(b)
-                    or vo.get(b) != vn.get(b)
-                ):
-                    parts.append(
-                        _CdfPartition(
-                            self.path,
-                            cur,
-                            (mo.get(b), do.get(b, []), vo.get(b, [])),
-                            (mn.get(b), dn.get(b, []), vn.get(b, [])),
-                            self.columns,
-                            self.preimages,
-                            self.cmap,
-                        )
-                    )
-        return parts
+            prev = cur
+        return [
+            _CdfPartition(
+                self.path,
+                commitlog.bucket_refs(first, b),
+                steps[b],
+                self.columns,
+                self.preimages,
+                self.cmap,
+            )
+            for b in sorted(steps)
+        ]
 
     def read(self, partition: _CdfPartition):
-        cols = partition.columns
-        cmap = getattr(partition, "colmap", None)
+        cols, cmap = partition.columns, partition.colmap
         old = _load_state(partition.table_path, partition.old_refs, cols, cmap)
-        new = _load_state(partition.table_path, partition.new_refs, cols, cmap)
-        for _id in sorted(set(old) | set(new)):
-            o, n = old.get(_id), new.get(_id)
-            # same changed-row predicate and classification as
-            # SilverTable.diff: version differs OR deleted differs
-            if (
-                o is not None
-                and n is not None
-                and o["version_"] == n["version_"]
-                and o["deleted"] == n["deleted"]
-            ):
-                continue
-            if n is None:
-                ct = "drop"  # impossible by K2; surfaced for audit
-            elif o is None:
-                ct = "delete" if n["deleted"] else "insert"
-            elif n["deleted"] and not o["deleted"]:
-                ct = "delete"
-            else:
-                ct = "update"
-            old_v = o["version_"] if o else None
-            if partition.preimages and o is not None and ct in (
-                "update",
-                "delete",
-            ):
-                yield tuple(o[c] for c in cols) + (
-                    f"{ct}_preimage",
-                    old_v,
-                    partition.gen,
-                )
-            payload = (
-                n
-                if n is not None
-                else {c: (_id if c == "_id" else None) for c in cols}
-            )
-            yield tuple(payload[c] for c in cols) + (
-                ct if not (partition.preimages and ct == "update") else
-                "update_postimage",
-                old_v,
-                partition.gen,
-            )
+        for gen, refs in partition.steps:
+            new = _load_state(partition.table_path, refs, cols, cmap)
+            yield from _changes(old, new, cols, gen, partition.preimages)
+            old = new
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable generation names; nothing to ack

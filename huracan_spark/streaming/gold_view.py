@@ -1,22 +1,15 @@
 """Gold-layer aggregate maintained from the silver CDF STREAM.
 
-The medallion pattern's last hop: a downstream consumer — decoupled
-from the ingest process — subscribes to the silver table's change
-feed (``sources/silver_cdf_source.py``, preimages on) and folds each
-micro-batch into a persisted grouped aggregate.  Unlike
-``pipeline/incr_view.py`` (which runs inside the writer and reads
-changed buckets for payloads), this consumer needs NOTHING but the
-feed: preimage rows carry the old payload for the -old adjustment,
-postimage rows the +new — so the view refresh is |groups| + |delta|
-rows of pure stream input, and the gold job can run on a different
-schedule, cluster, or team than the ingest.
-
-Adjustment algebra per feed row (tombstone payloads carry no live
-mass and are filtered):
-
-- ``insert`` / ``update_postimage`` (live)   -> +1 row, +value
-- ``update_preimage`` / ``delete_preimage``  -> -1 row, -value
-- ``delete`` (tombstone postimage), tombstone->tombstone updates -> 0
+The medallion pattern's last hop, and the one maintainer of the gold
+view: a downstream consumer — decoupled from the ingest process —
+subscribes to the silver table's change feed
+(``sources/silver_cdf_source.py``, preimages on) and folds each
+micro-batch into a persisted grouped aggregate.  It needs NOTHING but
+the feed: preimage and ``drop`` rows carry the old payload for the
+-old adjustment, postimage rows the +new — so the view refresh is
+|groups| + |delta| rows of pure stream input, and the gold job can run
+on a different schedule, cluster, or team than the ingest.  The sign
+rule and re-aggregate are ``pipeline/incr_view.py::fold_changes``.
 
 Replay safety: foreachBatch can re-deliver a committed batch after a
 restart; a batch-id marker makes the fold idempotent (the standard
@@ -33,8 +26,9 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from huracan_spark.pipeline.incr_view import fold_changes
 
 __all__ = ["run_gold_view", "read_gold_view"]
 
@@ -80,45 +74,16 @@ def run_gold_view(
                 last = json.load(f)["batch_id"]
         if batch_id <= last:
             return  # replayed batch after restart — already folded
-        sign = F.when(
-            F.col("_change_type").isin("insert", "update_postimage"),
-            F.lit(1),
-        ).when(
-            F.col("_change_type").isin(
-                "update_preimage", "delete_preimage"
-            ),
-            F.lit(-1),
-        )
-        adj = (
-            batch_df.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-            .withColumn("_sign", sign)
-            .filter(F.col("_sign").isNotNull())
-            .groupBy(group_col)
-            .agg(
-                F.sum("_sign").alias("n_rows"),
-                F.sum(F.col(value_col) * F.col("_sign")).alias(
-                    "sum_value"
-                ),
-            )
-        )
         data_dir = os.path.join(view_dir, "data")
         old = data_dir + ".old"
         if not os.path.isdir(data_dir) and os.path.isdir(old):
             os.rename(old, data_dir)  # crashed mid-swap: recover
-        s = batch_df.sparkSession
-        merged = (
-            s.read.parquet(data_dir).unionByName(adj)
+        view = (
+            batch_df.sparkSession.read.parquet(data_dir)
             if os.path.isdir(data_dir)
-            else adj
+            else None
         )
-        folded = (
-            merged.groupBy(group_col)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("sum_value").alias("sum_value"),
-            )
-            .filter(F.col("n_rows") > 0)
-        )
+        folded = fold_changes(view, batch_df, group_col, value_col)
         tmp = data_dir + ".tmp"
         folded.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(old, ignore_errors=True)

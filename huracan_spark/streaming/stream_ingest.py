@@ -11,6 +11,9 @@ The reference's livescan pipeline (etl.rs §3.1) as one streaming query:
            DLQ append (K7)
            completed-checkpoint append (K5/K6)
 
+The gold view is not maintained here: ``streaming/gold_view.py``
+folds the silver change feed downstream, as a stream of its own.
+
 Everything inside foreachBatch reuses the SAME batch transform chain
 (pipeline/ingest.py) — one code path, two drivers, mirroring the
 reference's shared tail between livescan and backfill
@@ -46,57 +49,6 @@ from huracan_spark.schemas import OBJECT_CHANGE_SCHEMA
 __all__ = ["StreamConfig", "changes_file_stream", "run_stream"]
 
 
-def _maintain_view(silver: SilverTable, gen_before: str | None, cfg) -> None:
-    """Fold the just-committed merge's change feed into the persisted
-    materialized view (incr_view over CDF).  The first batch seeds the
-    view with a full recompute (the one-time backfill); every later
-    batch costs |groups| + |delta| rows.  Single-writer by
-    construction: this runs inside the stream's foreachBatch, and
-    replays after restart rebuild from the last committed generations,
-    so an interrupted fold cannot double-count (the view is
-    OVERWRITTEN atomically per batch, keyed to the generation pair)."""
-    import os
-
-    from huracan_spark.pipeline.incr_view import grouped_view, refresh_view
-
-    gen_now = silver.current_generation()
-    if gen_now is None or gen_now == gen_before:
-        return
-    spark = silver.spark
-    marker = os.path.join(cfg.view_dir, "_VIEW_GEN")
-    seeded = os.path.exists(marker)
-    if not seeded or gen_before is None:
-        view = grouped_view(
-            silver.read(), cfg.view_group_col, cfg.view_value_col
-        )
-    else:
-        with open(marker) as f:
-            view_gen = f.read().strip()
-        if view_gen == gen_now:
-            return  # replayed batch: the fold already committed
-        try:
-            prev = spark.read.parquet(os.path.join(cfg.view_dir, "data"))
-            view = refresh_view(
-                prev, silver, view_gen, gen_now,
-                cfg.view_group_col, cfg.view_value_col,
-            )
-        except FileNotFoundError:
-            # the marker generation was vacuumed between folds — the
-            # delta is gone, so reseed from current state (correct,
-            # just pays one full recompute)
-            view = grouped_view(
-                silver.read(), cfg.view_group_col, cfg.view_value_col
-            )
-    # localCheckpoint BEFORE the overwrite: the new view's lineage reads
-    # the parquet dir it is about to replace — materialize it eagerly or
-    # the write job would read from the path mid-delete
-    staged = view.localCheckpoint(eager=True)
-    staged.write.mode("overwrite").parquet(os.path.join(cfg.view_dir, "data"))
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(gen_now)
-    os.replace(tmp, marker)
-
 # Dedup-state horizon: the reference GCs its digest-reconciliation map
 # after 120 checkpoints (etl.rs:306); with ~1 cp/s that's ~2 minutes.
 DEDUP_WATERMARK = "120 seconds"
@@ -110,13 +62,6 @@ class StreamConfig:
     max_files_per_trigger: int | None = None
     whitelist: list[str] | None = None
     blacklist: list[str] | None = None
-    # streaming-maintained materialized view: after each micro-batch's
-    # MERGE, fold that merge's change feed into a persisted grouped
-    # aggregate (incr_view) — the view stays current without ever
-    # rescanning the table
-    view_dir: str | None = None
-    view_group_col: str = "owner_kind"
-    view_value_col: str = "version_"
     available_now: bool = True  # False => continuous micro-batches
     trigger_interval: str = "100 milliseconds"  # pollintervalms analog
     extra_sources: list[DataFrame] = field(default_factory=list)
@@ -211,14 +156,11 @@ def run_stream(
                 parsed, content, cfg.whitelist, cfg.blacklist,
                 cache_join=True,
             )
-            gen_before = silver.current_generation()
             silver.merge(
                 build_silver_batch(res.enriched),
                 on_violation=cfg.merge_on_violation,
                 write_mode=cfg.merge_write_mode,
             )
-            if cfg.view_dir:
-                _maintain_view(silver, gen_before, cfg)
             if cfg.auto_compact_refs is not None:
                 silver.maybe_optimize(cfg.auto_compact_refs)
             if cfg.dlq_dir:

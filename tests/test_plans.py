@@ -267,15 +267,16 @@ def test_funnel_is_hash_join_not_nested_loop(spark, sf_dir):
 def test_pca_matvec_is_one_scan_no_corpus_shuffle(spark, sf_dir):
     """Each power-iteration pass must be ONE corpus scan: the per-row
     dot folds inline against the broadcast vector row, then a 64-group
-    partial agg — the ONLY exchange is the 64-group hash shuffle.  The
-    r10 long form cost two scans + an n-row groupBy(vec_id) exchange +
-    an n·64 join per pass; this pins that they never come back.
+    partial agg — no exchange is keyed by the corpus.  The r10 long
+    form cost two scans + an n-row groupBy(vec_id) exchange + an n·64
+    join per pass; this pins that they never come back.
     (The registered queries eagerly checkpoint each 64-row vector to
     stop broadcast-exchange races from duplicating passes, which
     truncates their final plan — so the shape is asserted on the
-    matvec building block itself.)"""
-    import re
-
+    matvec building block itself.)  The invariants are asserted, not a
+    count of bounded exchanges: ``_cent_arr`` is cached, and once an
+    earlier test has materialized it the cached subtree prints twice
+    (final and initial AQE plan), doubling every count inside it."""
     from pyspark.sql import functions as F
 
     from huracan_spark.queries import linalg
@@ -291,10 +292,9 @@ def test_pca_matvec_is_one_scan_no_corpus_shuffle(spark, sf_dir):
         .toString()
     )
     assert "partial_sum" in p  # 64-group agg combines map-side
-    # exactly ONE hash exchange: the 64-group agg (the 1-row vector
-    # rides a broadcast; means inside _cent_arr are also 64-group)
-    n_hash_ex = len(re.findall(r"Exchange hashpartitioning\(pos", p))
-    assert n_hash_ex <= 2, p  # matvec agg + the means pass inside cent
+    # no corpus-keyed shuffle: every exchange is a 64-group agg on pos
+    # (the 1-row vector rides a broadcast)
+    assert "hashpartitioning(vec_id" not in p, p
     assert "SortMergeJoin" not in p  # no corpus-sized join, ever
     assert "ShuffledHashJoin" not in p
     assert "Window" not in p

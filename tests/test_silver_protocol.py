@@ -62,10 +62,11 @@ def test_unknown_reader_feature_refuses_loudly(spark, tmp_path):
 def test_cdf_source_manifest_loaders_share_the_feature_gate(
     spark, tmp_path
 ):
-    """The CDF streaming source's pure-Python manifest loaders must
-    refuse unknown reader features exactly like SilverTable — a
-    future-feature commit the batch reader refuses must not be
-    silently misread by the stream."""
+    """The CDF streaming source reads manifests through the shared
+    commit-log module, whose gated load refuses unknown reader features
+    exactly like SilverTable — a future-feature commit the batch reader
+    refuses must not be silently misread by the stream."""
+    from huracan_spark.pipeline import commitlog
     from huracan_spark.sources import silver_cdf_source as cdf
 
     t = SilverTable(spark, str(tmp_path / "t"), n_buckets=2)
@@ -78,9 +79,9 @@ def test_cdf_source_manifest_loaders_share_the_feature_gate(
     with open(mfp, "w") as f:
         json.dump(raw, f)
     with pytest.raises(ValueError, match="paradox_vectors_v9"):
-        cdf._manifest_refs(t.path, gen)
+        commitlog.refs(t.path, gen)
     with pytest.raises(ValueError, match="paradox_vectors_v9"):
-        cdf._colmap(t.path)
+        cdf._SilverCdfStreamReader({"path": t.path}, ["_id"])
     with pytest.raises(ValueError, match="paradox_vectors_v9"):
         cdf._table_ddl(t.path)
 

@@ -425,6 +425,47 @@ def test_gold_view_maintained_from_cdf_stream(spark, tmp_path):
     )
 
 
+def test_gold_view_and_refresh_view_fold_a_restore_drop(spark, tmp_path):
+    """A RESTORE to before a key's insert makes the key vanish from the
+    state.  The feed's ``drop`` row carries the key's old payload, so
+    BOTH view folds take its mass back out: the gold stream and
+    ``refresh_view`` across the restore equal a full recompute (and
+    ``refresh_view`` does not refuse the drop)."""
+    import time as _time
+
+    from huracan_spark.pipeline.incr_view import grouped_view, refresh_view
+    from huracan_spark.pipeline.silver import SilverTable
+    from huracan_spark.streaming.gold_view import read_gold_view, run_gold_view
+
+    t = SilverTable(spark, str(tmp_path / "t"), n_buckets=2)
+    rows = lambda data: spark.createDataFrame(
+        data, "_id string, version_ long, deleted boolean, grp string, val long"
+    )
+    t.merge(rows([("a", 1, False, "g1", 10), ("b", 1, False, "g2", 20)]))
+    seed_gen = t.current_generation()
+    _time.sleep(0.002)
+    t.merge(rows([("k9", 1, False, "g1", 99)]))
+    merged_gen = t.current_generation()
+
+    def _snap(df):
+        return sorted((r.grp, r.n_rows, r.sum_value) for r in df.collect())
+
+    view, ck = str(tmp_path / "gold"), str(tmp_path / "ck")
+    run_gold_view(spark, t.path, view, "grp", "val", ck).awaitTermination(120)
+    assert _snap(read_gold_view(spark, view)) == [("g1", 2, 109), ("g2", 1, 20)]
+
+    _time.sleep(0.002)
+    restored_gen = t.restore(seed_gen)  # k9 drops
+    run_gold_view(spark, t.path, view, "grp", "val", ck).awaitTermination(120)
+    want = _snap(grouped_view(t.read(), "grp", "val"))
+    assert want == [("g1", 1, 10), ("g2", 1, 20)]
+    assert _snap(read_gold_view(spark, view)) == want
+
+    before = grouped_view(t.read(merged_gen), "grp", "val")
+    refreshed = refresh_view(before, t, merged_gen, restored_gen, "grp", "val")
+    assert _snap(refreshed) == want
+
+
 def test_cdf_stream_reconstructs_state_through_dml_optimize_restore(
     spark, tmp_path
 ):

@@ -923,12 +923,14 @@ def test_streaming_tombstone_cascade_property(spark, tmp_path_factory, rows, ver
 
 
 def test_streaming_maintained_materialized_view(spark, fx, tmp_path):
-    """A materialized grouped view maintained INSIDE the stream: each
-    micro-batch's merge folds its change feed into the persisted view
-    (first batch seeds via full recompute), so after the stream drains
-    the view equals a full recompute of the final silver state —
-    without any post-hoc rescan."""
+    """The gold view maintained DOWNSTREAM of the ingest stream: several
+    micro-batch merges land, then ``run_gold_view`` folds the silver
+    change feed into the persisted view, which equals a full recompute
+    of the final silver state — without any post-hoc rescan.  A
+    replayed feed file and a restarted gold consumer must not
+    double-count."""
     from huracan_spark.pipeline.incr_view import grouped_view
+    from huracan_spark.streaming.gold_view import read_gold_view, run_gold_view
 
     feed = str(tmp_path / "feed")
     os.makedirs(feed)
@@ -943,41 +945,39 @@ def test_streaming_maintained_materialized_view(spark, fx, tmp_path):
     view_dir = str(tmp_path / "view")
     cfg = StreamConfig(
         checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # several micro-batches -> several folds
-        view_dir=view_dir,
-        view_group_col="owner_kind",
-        view_value_col="version_",
+        max_files_per_trigger=1,  # several micro-batches -> several commits
     )
-    q = run_stream(
-        spark, changes_file_stream(spark, feed, 1), fx["content"], silver, cfg
-    )
-    _await(q)
 
-    got = {
-        r.owner_kind: (r.n_rows, r.sum_value)
-        for r in spark.read.parquet(f"{view_dir}/data").collect()
-    }
-    want = {
-        r.owner_kind: (r.n_rows, r.sum_value)
-        for r in grouped_view(silver.read(), "owner_kind", "version_").collect()
-    }
-    assert got == want and got
+    def _drain_and_check():
+        _await(
+            run_stream(
+                spark, changes_file_stream(spark, feed, 1), fx["content"],
+                silver, cfg,
+            )
+        )
+        _await(
+            run_gold_view(
+                spark, silver.path, view_dir, "owner_kind", "version_",
+                str(tmp_path / "gold_ckpt"), available_now=True,
+            )
+        )
+        got = {
+            r.owner_kind: (r.n_rows, r.sum_value)
+            for r in read_gold_view(spark, view_dir).collect()
+        }
+        want = {
+            r.owner_kind: (r.n_rows, r.sum_value)
+            for r in grouped_view(
+                silver.read(), "owner_kind", "version_"
+            ).collect()
+        }
+        assert got == want and got
 
+    _drain_and_check()
+    assert len(silver.generations()) >= 3  # one commit per feed file
     # restart with a replayed feed file: the view must not double-count
     spark.read.parquet(f"{chunks}/_c=0").write.mode("append").parquet(feed)
-    q2 = run_stream(
-        spark, changes_file_stream(spark, feed, 1), fx["content"], silver, cfg
-    )
-    _await(q2)
-    got2 = {
-        r.owner_kind: (r.n_rows, r.sum_value)
-        for r in spark.read.parquet(f"{view_dir}/data").collect()
-    }
-    want2 = {
-        r.owner_kind: (r.n_rows, r.sum_value)
-        for r in grouped_view(silver.read(), "owner_kind", "version_").collect()
-    }
-    assert got2 == want2
+    _drain_and_check()
 
 
 def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
