@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,18 +58,6 @@ class CommitConflict(RuntimeError):
     (Delta's ConcurrentModificationException analog)."""
 
 
-class _LockHandle(str):
-    """Commit-lock path plus the identity nonce written into the file
-    at acquisition and the holder's heartbeat control.  The heartbeat
-    keeps a LIVE holder's mtime fresh so stale-breaking only ever hits
-    dead writers; the nonce lets release verify the file is still ours
-    before unlinking (defense in depth)."""
-
-    nonce: str = ""
-    stop_heartbeat = None  # threading.Event, set by _acquire_commit_lock
-    heartbeat_thread = None
-
-
 class MergeMetrics:
     """K3/K8 write-result audit: inserted/modified/unchanged counts
     (etl.rs:1280-1318)."""
@@ -92,39 +81,30 @@ class SilverTable:
         self.path = path
         os.makedirs(path, exist_ok=True)
         # an existing table's bucket count is part of its on-disk layout:
-        # honor the persisted value, or merges would misbucket keys
-        persisted = self._persisted_n_buckets()
-        self.n_buckets = persisted if persisted is not None else n_buckets
-
-    def _persisted_n_buckets(self) -> int | None:
-        # layout metadata, read ungated: a handle on a table with an
+        # honor the persisted value, or merges would misbucket keys.
+        # Layout metadata is read ungated: a handle on a table with an
         # unknown reader feature still opens, and its first row read
         # refuses loudly
         gen = self.current_generation()
-        if gen is None:
-            return None
-        try:
-            return commitlog.load(self.path, gen).get("n_buckets")
-        except FileNotFoundError:
-            return None
+        persisted = gen and commitlog.load(path, gen).get("n_buckets")
+        self.n_buckets = persisted or n_buckets
 
-    # -- pointers / manifests -------------------------------------------
-
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
-    # -- optimistic concurrency (Delta-style commit protocol) -----------
+    # -- the commit protocol (Delta-style optimistic concurrency) -------
     #
-    # Data files are written OUTSIDE any lock (concurrent writers never
-    # block each other's Spark jobs); only the pointer swap is guarded:
-    # an exclusive on-disk lock (O_CREAT|O_EXCL — atomic on POSIX) plus
-    # a compare-and-swap against the generation the writer read at
-    # entry.  A writer that lost the race rolls back its orphan
-    # generation dir and retries its merge against the new state —
-    # exactly Delta's optimistic protocol, where conflicting commits
-    # re-resolve against the winner's snapshot.
+    # Every writer commits through ``_commit``: data files are written
+    # OUTSIDE any lock (concurrent writers never block each other's
+    # Spark jobs); only the pointer swap is guarded, by the commit lock
+    # plus a compare-and-swap against the generation the attempt read.
+    # A lost attempt rolls its claimed generation back and retries
+    # against the new state — Delta's optimistic protocol, where
+    # conflicting commits re-resolve against the winner's snapshot.
+    # The on-disk half (claim, manifest rule, CAS, lock) lives in
+    # ``commitlog``.
 
+    #: commit attempts per write; the last one holds the commit lock
+    #: for its whole span (pure optimistic retries livelock under 4
+    #: writers)
+    _COMMIT_ATTEMPTS = 6
     # generous: a live pessimistic writer legitimately holds the lock
     # across a whole Spark merge — only a truly dead writer's lock may
     # be broken
@@ -136,109 +116,107 @@ class SilverTable:
     #: never broken mid-span no matter how many Spark jobs it runs
     _LOCK_HEARTBEAT_SECS = 60.0
 
-    def _acquire_commit_lock(self, timeout: float = 120.0) -> "_LockHandle":
-        import threading
+    def _acquire_commit_lock(self, timeout: float = 120.0) -> commitlog.Lock:
+        return commitlog.acquire_lock(
+            self.path, timeout, self._LOCK_STALE_SECS, self._LOCK_HEARTBEAT_SECS
+        )
 
-        lock = os.path.join(self.path, "_COMMIT_LOCK")
-        deadline = time.monotonic() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                # identity nonce: release verifies the lock file still
-                # carries OUR nonce before unlinking, as defense in
-                # depth under the heartbeat (a wrong unlink would
-                # delete the NEXT writer's fresh lock and silently
-                # admit a third writer into a pessimistic span)
-                nonce = f"{os.getpid()}-{time.monotonic_ns()}"
-                os.write(fd, nonce.encode())
-                os.close(fd)
-                handle = _LockHandle(lock)
-                handle.nonce = nonce
-                stop = threading.Event()
-                handle.stop_heartbeat = stop
+    _release_commit_lock = staticmethod(commitlog.release_lock)
 
-                def _beat():
-                    while not stop.wait(self._LOCK_HEARTBEAT_SECS):
-                        try:
-                            os.utime(lock)
-                        except FileNotFoundError:
-                            return  # lock gone: holder crashed mid-span
-
-                t = threading.Thread(target=_beat, daemon=True)
-                t.start()
-                handle.heartbeat_thread = t
-                return handle
-            except FileExistsError:
-                try:  # break locks abandoned by a dead writer
-                    if time.time() - os.path.getmtime(lock) > self._LOCK_STALE_SECS:
-                        # rename, don't unlink: exactly one breaker wins
-                        # the rename; a second breaker must NOT unlink
-                        # the fresh lock the winner just recreated
-                        stale = f"{lock}.stale-{os.getpid()}-{time.monotonic_ns()}"
-                        os.rename(lock, stale)
-                        os.unlink(stale)
-                        continue
-                except FileNotFoundError:
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(f"commit lock busy: {lock}")
-                time.sleep(0.02)
-
-    def _release_commit_lock(self, lock: "_LockHandle") -> None:
-        """Stop the heartbeat, then unlink the commit lock only if it
-        is still OURS (nonce matches).  The heartbeat guarantees a live
-        holder is never stale-broken, so by the time we release, the
-        file at this path is ours unless our PROCESS previously died
-        and restarted mid-span (impossible for one handle) — the nonce
-        check is belt-and-braces against protocol bugs, and the
-        read-then-unlink window is unreachable for a heartbeating
-        holder (our mtime is at most _LOCK_HEARTBEAT_SECS old, far
-        under _LOCK_STALE_SECS)."""
-        stop = getattr(lock, "stop_heartbeat", None)
-        if stop is not None:
-            stop.set()
-        try:
-            with open(lock) as f:
-                if f.read() != getattr(lock, "nonce", None):
-                    return
-        except FileNotFoundError:
-            return
-        try:
-            os.unlink(lock)
-        except FileNotFoundError:
-            pass
+    def _claim_generation(self, after: str | None) -> tuple[str, str]:
+        return commitlog.claim(self.path, after)
 
     def _try_commit(
         self, expected_gen: str | None, new_gen: str, locked: bool = False
     ) -> bool:
-        """Atomically swap ``_CURRENT`` to ``new_gen`` iff it still
-        points at ``expected_gen``.  Returns False on a lost race.
-        ``locked=True`` means the caller already holds the commit lock
-        (the pessimistic fallback path)."""
+        """Publish ``new_gen``'s staged manifest and swap ``_CURRENT`` to
+        it iff the pointer still names ``expected_gen``.  Returns False
+        on a lost race.  ``locked=True`` means the caller already holds
+        the commit lock (the pessimistic attempt)."""
         lock = None if locked else self._acquire_commit_lock()
         try:
-            if self.current_generation() != expected_gen:
-                return False
-            tmp = self._pointer + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"generation": new_gen}, f)
-            os.replace(tmp, self._pointer)
-            return True
+            return commitlog.cas(self.path, expected_gen, new_gen)
         finally:
             if lock is not None:
                 self._release_commit_lock(lock)
+
+    def _commit(
+        self,
+        operation: str,
+        build,
+        base: dict | None = None,
+        locked: bool = False,
+        rebase: bool = False,
+    ) -> str | None:
+        """The one commit loop.  Each attempt reads its parent (the
+        current generation), claims a generation named after it, calls
+        ``build(parent, parent_manifest, gen, gen_dir)`` — which writes
+        any data under ``gen_dir`` and returns the manifest keys it
+        replaces (``commit`` holding extra commit fields), or None for
+        a no-op, which releases the claim — derives the manifest from
+        ``base`` (default: the parent's) by ``commitlog.derive``, and
+        CASes the pointer.  A lost attempt is rolled back and retried;
+        the last attempt holds the commit lock for its whole span.
+        ``locked=True``: the caller already holds the lock, so the one
+        attempt runs under it.  ``rebase=True`` (merges): a lost
+        attempt whose buckets the winner left alone is spliced onto
+        the winner's manifest by the next attempt instead of rebuilt
+        (``commitlog.rebase``; its data stays in the lost claim's dir,
+        which the spliced manifest references).
+        Returns the committed generation, or None for a no-op."""
+        attempts = 1 if locked else self._COMMIT_ATTEMPTS
+        lost = None  # (parent manifest, manifest, data dir) to rebase
+        for attempt in range(attempts):
+            held = locked or attempt == attempts - 1
+            lock = (
+                self._acquire_commit_lock(timeout=300.0)
+                if held and not locked
+                else None
+            )
+            try:
+                parent = self.current_generation()
+                raw = self._manifest_raw(parent) if parent else {}
+                gen, out = self._claim_generation(parent)
+                try:
+                    replaced = lost and commitlog.rebase(*lost[:2], raw, parent)
+                    if not replaced:
+                        if lost:
+                            shutil.rmtree(lost[2], ignore_errors=True)
+                            lost = None
+                        replaced = build(parent, raw, gen, out)
+                    if replaced is None:
+                        shutil.rmtree(out, ignore_errors=True)
+                        return None
+                    mf = commitlog.derive(
+                        raw if base is None else base, replaced, operation
+                    )
+                    commitlog.stage(out, mf)
+                except BaseException:
+                    shutil.rmtree(out, ignore_errors=True)
+                    if lost:
+                        shutil.rmtree(lost[2], ignore_errors=True)
+                    raise
+                if self._try_commit(parent, gen, locked=held):
+                    return gen
+                if rebase and lost is None:
+                    lost = (raw, mf, out)  # its data may still commit
+                else:
+                    shutil.rmtree(out, ignore_errors=True)
+            finally:
+                if lock is not None:
+                    self._release_commit_lock(lock)
+        if lost:
+            shutil.rmtree(lost[2], ignore_errors=True)
+        raise CommitConflict(f"{operation} lost the commit race {attempts} times")
 
     def current_generation(self) -> str | None:
         return commitlog.current(self.path)
 
     def generations(self) -> list[str]:
-        """All persisted state generations, oldest first (S7 time travel:
-        the reference's unused past-object lookups, client.rs:92-109,
-        map to reading an older generation)."""
-        return sorted(
-            d for d in os.listdir(self.path)
-            if d.startswith("gen-") and os.path.isdir(os.path.join(self.path, d))
-        )
+        """Committed generations in commit order, oldest first (S7 time
+        travel: the reference's unused past-object lookups,
+        client.rs:92-109, map to reading an older generation)."""
+        return commitlog.generations(self.path)
 
     def manifest(self, generation: str) -> dict[str, str]:
         """bucket id (str) -> data dir relative to the table root."""
@@ -246,10 +224,9 @@ class SilverTable:
 
     def history(self) -> list[dict]:
         """Commit log, newest first (the DESCRIBE HISTORY analog): one
-        entry per on-disk generation with the operation that produced
+        entry per committed generation with the operation that produced
         it and its commit metadata.  Generations from before this
-        feature (or claimed but uncommitted) report operation
-        "unknown"."""
+        feature report operation "unknown"."""
         out = []
         for g in reversed(self.generations()):
             try:
@@ -707,46 +684,23 @@ class SilverTable:
         )
         return bloom.harvest_blooms(df, cfg)
 
-    def _commit_bloom_rebuild(self, max_attempts: int = 6) -> str:
+    def _commit_bloom_rebuild(self) -> str:
         """Index the whole current state: harvest bitmaps for every
         referenced file and commit a metadata-only generation carrying
         them (data is referenced, not rewritten)."""
-        import shutil
 
-        for _ in range(max_attempts):
-            current_gen = self.current_generation()
-            raw = self._manifest_raw(current_gen)
-            delta_buckets = set(raw.get("deltas", {}))
+        def build(parent, raw, gen, out):
             # delta'd buckets never file-prune (see prune_plan), so
-            # indexing only the copy-on-write buckets' files
-            blooms = self._harvest_blooms(
-                [
-                    rel
-                    for b, rel in raw["buckets"].items()
-                    if b not in delta_buckets
-                ]
-            )
-            gen, out = self._claim_generation()
-            mf = {
-                k: v
-                for k, v in raw.items()
-                if k
-                in (
-                    "buckets", "n_buckets", "schema", "stats", "fstats",
-                    "deltas", "dvs", "colmap", "retired",
-                )
+            # index only the copy-on-write buckets' files
+            deltas = raw.get("deltas", {})
+            return {
+                "blooms": self._harvest_blooms(
+                    [r for b, r in raw["buckets"].items() if b not in deltas]
+                ),
+                "commit": {"columns": sorted(self.bloom_indexes())},
             }
-            mf["blooms"] = blooms
-            mf["commit"] = {
-                "operation": "BLOOM INDEX",
-                "ts_ms": int(time.time() * 1000),
-                "columns": sorted(self.bloom_indexes()),
-            }
-            self._write_manifest(out, mf)
-            if self._try_commit(current_gen, gen):
-                return gen
-            shutil.rmtree(out, ignore_errors=True)
-        raise CommitConflict("bloom rebuild lost the commit race")
+
+        return self._commit("BLOOM INDEX", build)
 
     # -- CHECK constraints (Delta invariants / DLT expectations) ---------
 
@@ -763,32 +717,36 @@ class SilverTable:
         except FileNotFoundError:
             return {}
 
+    def _update_config(self, path: str, mutate) -> None:
+        """The one table-config writer: under the commit lock, read the
+        JSON map at ``path``, ``mutate`` it in place, and replace the
+        file atomically."""
+        lock = self._acquire_commit_lock()
+        try:
+            try:
+                with open(path) as f:
+                    cfg = json.load(f)
+            except FileNotFoundError:
+                cfg = {}
+            mutate(cfg)
+            with open(path + ".tmp", "w") as f:
+                json.dump(cfg, f)
+            os.replace(path + ".tmp", path)
+        finally:
+            self._release_commit_lock(lock)
+
     def add_check(self, name: str, expr: str) -> None:
         """ALTER TABLE ADD CONSTRAINT analog.  Enforced on every
         subsequent merge; persisted with the table so reopened handles
         enforce it too."""
-        lock = self._acquire_commit_lock()
-        try:
-            cons = self.constraints()
-            cons[name] = expr
-            tmp = self._constraints_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cons, f)
-            os.replace(tmp, self._constraints_path)
-        finally:
-            self._release_commit_lock(lock)
+        self._update_config(
+            self._constraints_path, lambda cons: cons.update({name: expr})
+        )
 
     def drop_check(self, name: str) -> None:
-        lock = self._acquire_commit_lock()
-        try:
-            cons = self.constraints()
-            cons.pop(name, None)
-            tmp = self._constraints_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cons, f)
-            os.replace(tmp, self._constraints_path)
-        finally:
-            self._release_commit_lock(lock)
+        self._update_config(
+            self._constraints_path, lambda cons: cons.pop(name, None)
+        )
 
     # -- generated columns (Delta GENERATED ALWAYS AS) --------------------
 
@@ -816,28 +774,14 @@ class SilverTable:
         write); merge a touch-up batch or ``update_where`` to backfill."""
         if col in ("_id", "version_", "deleted", "_bucket"):
             raise ValueError(f"cannot generate protected column {col!r}")
-        lock = self._acquire_commit_lock()
-        try:
-            gens = self.generated_columns()
-            gens[col] = expr
-            tmp = self._generated_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(gens, f)
-            os.replace(tmp, self._generated_path)
-        finally:
-            self._release_commit_lock(lock)
+        self._update_config(
+            self._generated_path, lambda gens: gens.update({col: expr})
+        )
 
     def drop_generated_column(self, col: str) -> None:
-        lock = self._acquire_commit_lock()
-        try:
-            gens = self.generated_columns()
-            gens.pop(col, None)
-            tmp = self._generated_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(gens, f)
-            os.replace(tmp, self._generated_path)
-        finally:
-            self._release_commit_lock(lock)
+        self._update_config(
+            self._generated_path, lambda gens: gens.pop(col, None)
+        )
 
     def _apply_generated(self, batch: DataFrame) -> tuple[DataFrame, dict]:
         """Compute omitted generated columns; return synthetic CHECK
@@ -949,8 +893,6 @@ class SilverTable:
             # rewrite the quarantine to the residue (lineage was cut
             # above, so overwriting the dir the frames came from is
             # safe; the lock guarantees no concurrent merge appended)
-            import shutil
-
             qdir = os.path.join(self.path, "_quarantine")
             shutil.rmtree(qdir, ignore_errors=True)
             if still_failing is not None and still_failing.count() > 0:
@@ -1001,11 +943,9 @@ class SilverTable:
         """Every data dir the generation references: bucket bases plus
         merge-on-read deltas plus deletion-vector sidecars (the
         reference set vacuum/clone must honor)."""
-        raw = self._manifest_raw(generation)
-        rels = list(raw.get("buckets", {}).values())
-        for ds in raw.get("deltas", {}).values():
-            rels.extend(ds)
-        for ds in raw.get("dvs", {}).values():
+        buckets, deltas, dvs = commitlog.refs(self.path, generation)
+        rels = list(buckets.values())
+        for ds in [*deltas.values(), *dvs.values()]:
             rels.extend(ds)
         return rels
 
@@ -1135,33 +1075,15 @@ class SilverTable:
         is referenced, not copied — O(metadata)).  History stays
         monotonic, so the undone merges remain inspectable and
         reference-aware vacuum keeps every file the restored state
-        needs.  Commits through the optimistic CAS like any writer."""
+        needs.  The target's manifest is the commit's base, so its
+        layout (bucket count, schema, column mapping) comes back with
+        its data."""
         target = self._manifest_raw(generation)  # raises if unknown
-        for _ in range(6):
-            current_gen = self.current_generation()
-            gen, out = self._claim_generation()
-            mf = {
-                "buckets": target["buckets"],
-                "n_buckets": self.n_buckets,
-                "commit": {
-                    "operation": "RESTORE",
-                    "ts_ms": int(time.time() * 1000),
-                    "restored": generation,
-                },
-            }
-            for carried in (
-                "schema", "stats", "fstats", "blooms", "deltas", "dvs",
-                "colmap", "retired",
-            ):
-                if carried in target:
-                    mf[carried] = target[carried]
-            self._write_manifest(out, mf)
-            if self._try_commit(current_gen, gen):
-                return gen
-            import shutil
-
-            shutil.rmtree(out, ignore_errors=True)
-        raise CommitConflict("restore lost the commit race 6 times")
+        return self._commit(
+            "RESTORE",
+            lambda *_: {"commit": {"restored": generation}},
+            base=target,
+        )
 
     def table_schema(self, generation: str | None = None):
         """The generation's committed table schema (StructType), or
@@ -1274,16 +1196,13 @@ class SilverTable:
     def _alter_schema_commit(self, mutate, op: str, **commit_extra) -> str:
         """Shared metadata-only ALTER TABLE commit: ``mutate(fields,
         cmap, retired)`` edits the logical field list + mapping in
-        place; data/stats/bloom refs carry verbatim.  CAS-retried like
-        every writer."""
-        import shutil
+        place; data/stats/bloom refs carry verbatim."""
+        from pyspark.sql.types import StructType
 
-        for _ in range(6):
-            current_gen = self.current_generation()
-            if current_gen is None:
+        def build(parent, raw, gen, out):
+            if parent is None:
                 raise ValueError("cannot alter the schema of an empty table")
-            raw = self._manifest_raw(current_gen)
-            schema = self.table_schema(current_gen)
+            schema = self.table_schema(parent)
             if schema is None:
                 raise ValueError(
                     "pre-schema-manifest table: compact() once to commit a "
@@ -1302,31 +1221,14 @@ class SilverTable:
             retired = list(raw.get("retired", []))
             fields = list(schema.fields)
             mutate(fields, cmap, retired)
-            from pyspark.sql.types import StructType
+            return {
+                "schema": json.dumps(StructType(fields).jsonValue()),
+                "colmap": cmap,
+                "retired": retired,
+                "commit": commit_extra,
+            }
 
-            gen, out = self._claim_generation()
-            mf = {
-                k: v
-                for k, v in raw.items()
-                if k
-                in (
-                    "buckets", "n_buckets", "stats", "fstats", "blooms",
-                    "deltas", "dvs",
-                )
-            }
-            mf["schema"] = json.dumps(StructType(fields).jsonValue())
-            mf["colmap"] = cmap
-            mf["retired"] = retired
-            mf["commit"] = {
-                "operation": op,
-                "ts_ms": int(time.time() * 1000),
-                **commit_extra,
-            }
-            self._write_manifest(out, mf)
-            if self._try_commit(current_gen, gen):
-                return gen
-            shutil.rmtree(out, ignore_errors=True)
-        raise CommitConflict(f"{op} lost the commit race 6 times")
+        return self._commit(op, build)
 
     def rename_column(self, old: str, new: str) -> str:
         """ALTER TABLE RENAME COLUMN — metadata-only (no data rewrite):
@@ -1544,14 +1446,15 @@ class SilverTable:
         drop the delete — there is no sound rebase for positions.
         DELETEs are rare relative to merges; holding the lock across
         the (small) marking job is the Delta DV trade-off too."""
-        lock = self._acquire_commit_lock(timeout=300.0)
-        try:
-            current_gen = self.current_generation()
-            if current_gen is None:
-                return 0
-            matching = self.read_where(filters, current_gen)
+        deleted = 0
+
+        def build(parent, raw, gen, out):
+            nonlocal deleted
+            if parent is None:
+                return None
+            matching = self.read_where(filters, parent)
             if matching is None:
-                return 0
+                return None
             live = (
                 matching.filter(~F.col("deleted"))
                 .select("_id", "version_")
@@ -1559,11 +1462,9 @@ class SilverTable:
             )
             n = live.count()
             if n == 0:
-                return 0
-            raw = self._manifest_raw(current_gen)
-            cmap = self.colmap(current_gen)
+                return None
             phys_schema = self._physical_schema(
-                self.table_schema(current_gen), cmap
+                self.table_schema(parent), self.colmap(parent)
             )
             # winning stored copies: re-read the files the predicate
             # kept, pos-aware, and match on (_id, version_).  A live
@@ -1571,7 +1472,7 @@ class SilverTable:
             # version tombstone would have won the tie and the key
             # would not be live), so marking every copy is sound — a
             # duplicated delivery's copies overlay to identical images.
-            kept, _ = self.prune_plan(filters, current_gen)
+            kept, _ = self.prune_plan(filters, parent)
             marks = (
                 self._read_buckets(kept, schema=phys_schema, with_pos=True)
                 .join(F.broadcast(live), ["_id", "version_"], "inner")
@@ -1588,40 +1489,29 @@ class SilverTable:
                 .distinct()
                 .collect()
             )
-            gen, out = self._claim_generation()
             rel = os.path.join(gen, "_dv")
             marks.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.path, rel)
             )
-            new_dvs = {b: list(rs) for b, rs in raw.get("dvs", {}).items()}
+            dvs = {b: list(rs) for b, rs in raw.get("dvs", {}).items()}
             for b in touched:
-                new_dvs.setdefault(b, []).append(rel)
-            mf = {
-                k: v
-                for k, v in raw.items()
-                if k
-                in (
-                    "buckets", "n_buckets", "schema", "stats", "fstats",
-                    "blooms", "deltas", "colmap", "retired",
-                )
+                dvs.setdefault(b, []).append(rel)
+            deleted = n
+            return {
+                "dvs": dvs,
+                "commit": {
+                    "mode": "dv",
+                    "deleted_keys": n,
+                    "touched_buckets": len(touched),
+                },
             }
-            mf["dvs"] = new_dvs
-            mf["commit"] = {
-                "operation": "DELETE",
-                "ts_ms": int(time.time() * 1000),
-                "mode": "dv",
-                "deleted_keys": n,
-                "touched_buckets": len(touched),
-            }
-            self._write_manifest(out, mf)
-            if not self._try_commit(current_gen, gen, locked=True):
-                raise CommitConflict(
-                    "dv delete lost the commit race under the lock "
-                    "(another writer bypassed the protocol?)"
-                )
-            return n
+
+        lock = self._acquire_commit_lock(timeout=300.0)
+        try:
+            self._commit("DELETE", build, locked=True)
         finally:
             self._release_commit_lock(lock)
+        return deleted
 
     def update_where(
         self, filters, assignments: dict[str, str], write_mode: str = "cow"
@@ -1833,10 +1723,11 @@ class SilverTable:
         references, so every retained generation remains readable.
         ``dry_run=True`` (VACUUM DRY RUN) only reports what would be
         removed.  Returns removed (or removable) generation names."""
-        import shutil
-
         current = self.current_generation()
-        gens = self.generations()
+        # every claimed dir, committed or not: an in-flight attempt's
+        # claim and the data dir a rebased merge references carry no
+        # manifest of their own
+        gens = sorted(d for d in os.listdir(self.path) if d.startswith("gen-"))
         kept = set(gens[-keep:]) if keep else set()
         if current:
             kept.add(current)
@@ -1852,9 +1743,7 @@ class SilverTable:
             try:
                 rels = self._all_rels(g)
             except FileNotFoundError:
-                # an in-flight generation claimed by a concurrent writer
-                # has no manifest yet — keep it, reference nothing
-                continue
+                continue  # a manifest-less dir references nothing
             for rel in rels:
                 ref_gen = rel.split(os.sep, 1)[0]
                 if ref_gen not in kept:
@@ -1879,12 +1768,9 @@ class SilverTable:
         clone's links keep the inodes alive.  Cost is O(#files)
         metadata, not O(data) — the cheap dev/test/backup fork of a
         100 TB table."""
-        import shutil
-
         gen = self.current_generation()
         if gen is None:
             raise ValueError("cannot clone an empty silver table")
-        manifest = self.manifest(gen)
         all_rels = self._all_rels(gen)
         os.makedirs(os.path.join(dest_path, gen), exist_ok=True)
         for rel in set(all_rels):
@@ -1899,31 +1785,23 @@ class SilverTable:
                         os.link(s, d)
                     except OSError:  # cross-device: fall back to copy
                         shutil.copy2(s, d)
-        # every generation dir the clone materializes must carry its own
-        # manifest (with n_buckets), or generations()/vacuum()/time-travel
-        # on the clone hit manifest-less dirs and crash; referenced older
-        # generations get their source manifest copied verbatim
-        clone_mf = {
-            "buckets": manifest,
-            "n_buckets": self.n_buckets,
-            "commit": {
-                "operation": "CLONE",
-                "ts_ms": int(time.time() * 1000),
-                "source": self.path,
-            },
-        }
-        src_raw = self._manifest_raw(gen)
-        for carried in (
-            "schema", "stats", "fstats", "blooms", "deltas", "dvs",
-            "colmap", "retired",
-        ):
-            if carried in src_raw:
-                clone_mf[carried] = src_raw[carried]
-        self._write_manifest(os.path.join(dest_path, gen), clone_mf)
+        # every committed generation the clone materializes carries its
+        # own manifest, or time travel/vacuum on the clone would hit
+        # manifest-less dirs: the current one by the manifest rule over
+        # the source's, referenced older ones copied verbatim
+        commitlog.stage(
+            os.path.join(dest_path, gen),
+            commitlog.derive(
+                self._manifest_raw(gen),
+                {"commit": {"source": self.path}},
+                "CLONE",
+            ),
+        )
+        commitlog.publish(dest_path, gen)
         for rel in set(all_rels):
             ref_gen = rel.split(os.sep, 1)[0]
-            dst_mf = os.path.join(dest_path, ref_gen, "manifest.json")
-            src_mf = os.path.join(self.path, ref_gen, "manifest.json")
+            dst_mf = os.path.join(dest_path, ref_gen, commitlog.MANIFEST)
+            src_mf = os.path.join(self.path, ref_gen, commitlog.MANIFEST)
             if not os.path.exists(dst_mf) and os.path.exists(src_mf):
                 shutil.copy2(src_mf, dst_mf)
         # table-level declarative config travels with the clone:
@@ -1933,12 +1811,8 @@ class SilverTable:
             s = os.path.join(self.path, cfg)
             if os.path.exists(s):
                 shutil.copy2(s, os.path.join(dest_path, cfg))
-        clone = SilverTable(self.spark, dest_path, n_buckets=self.n_buckets)
-        tmp = clone._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"generation": gen}, f)
-        os.replace(tmp, clone._pointer)
-        return clone
+        commitlog.set_current(dest_path, gen)
+        return SilverTable(self.spark, dest_path, n_buckets=self.n_buckets)
 
     def compact(
         self,
@@ -1976,71 +1850,46 @@ class SilverTable:
         compaction racing a merge retries against the merged state
         instead of silently discarding the merge (Delta's OPTIMIZE
         conflict behavior)."""
-        import shutil
-
         if n_buckets is not None and n_buckets <= 0:
             raise ValueError("n_buckets must be positive")
-        for attempt in range(6):
-            locked = attempt == 5  # final attempt: pessimistic
-            lock = self._acquire_commit_lock(timeout=300.0) if locked else None
-            try:
-                current_gen = self.current_generation()
-                if current_gen is None:
-                    return None
-                if n_buckets is not None:
-                    self.n_buckets = n_buckets
-                else:
-                    persisted = self._persisted_n_buckets()
-                    if persisted is not None:
-                        self.n_buckets = persisted
-                cmap = self.colmap(current_gen)
-                prev_raw = self._manifest_raw(current_gen)
-                state = self.read().withColumn("_bucket", self._bucket_col())
-                gen, out = self._claim_generation()
-                clustered = state.repartition(self.n_buckets, "_bucket")
-                if cluster_by:
-                    clustered = clustered.sortWithinPartitions(
-                        "_bucket", *cluster_by
-                    )
-                # files store physical names (column mapping); the
-                # rename is a projection, so the cluster order holds
-                writer = self._to_physical(clustered, cmap).write
-                if max_records_per_file is not None:
-                    writer = writer.option(
-                        "maxRecordsPerFile", max_records_per_file
-                    )
-                writer.partitionBy("_bucket").mode("overwrite").parquet(out)
-                buckets = {
-                    d.split("=", 1)[1]: os.path.join(gen, d)
-                    for d in os.listdir(out)
-                    if d.startswith("_bucket=")
-                }
-                bstats, fstats = self._harvest_stats(out)
-                mf = {
-                    "buckets": buckets,
+
+        def build(parent, raw, gen, out):
+            if parent is None:
+                return None
+            self.n_buckets = n_buckets or raw.get("n_buckets") or self.n_buckets
+            cmap = raw.get("colmap")
+            state = self.read(parent).withColumn("_bucket", self._bucket_col())
+            clustered = state.repartition(self.n_buckets, "_bucket")
+            if cluster_by:
+                clustered = clustered.sortWithinPartitions("_bucket", *cluster_by)
+            # files store physical names (column mapping); the rename
+            # is a projection, so the cluster order holds
+            writer = self._to_physical(clustered, cmap).write
+            if max_records_per_file is not None:
+                writer = writer.option("maxRecordsPerFile", max_records_per_file)
+            writer.partitionBy("_bucket").mode("overwrite").parquet(out)
+            buckets = {
+                d.split("=", 1)[1]: os.path.join(gen, d)
+                for d in os.listdir(out)
+                if d.startswith("_bucket=")
+            }
+            bstats, fstats = self._harvest_stats(out)
+            return {
+                "buckets": buckets,
+                "deltas": {},
+                "dvs": {},
+                "n_buckets": self.n_buckets,
+                "schema": self._schema_json(state),
+                "stats": bstats,
+                "fstats": fstats,
+                "blooms": self._harvest_blooms(list(buckets.values())),
+                "commit": {
+                    "touched_buckets": len(buckets),
                     "n_buckets": self.n_buckets,
-                    "schema": self._schema_json(state),
-                    "stats": bstats,
-                    "fstats": fstats,
-                    "blooms": self._harvest_blooms(list(buckets.values())),
-                    "commit": {
-                        "operation": "OPTIMIZE",
-                        "ts_ms": int(time.time() * 1000),
-                        "touched_buckets": len(buckets),
-                        "n_buckets": self.n_buckets,
-                    },
-                }
-                if cmap is not None:
-                    mf["colmap"] = cmap
-                    mf["retired"] = prev_raw.get("retired", [])
-                self._write_manifest(out, mf)
-                if self._try_commit(current_gen, gen, locked=locked):
-                    return gen
-                shutil.rmtree(out, ignore_errors=True)
-            finally:
-                if lock is not None:
-                    self._release_commit_lock(lock)
-        raise CommitConflict("compact lost the commit race 6 times")
+                },
+            }
+
+        return self._commit("OPTIMIZE", build)
 
     @staticmethod
     def _schema_json(df: DataFrame) -> str:
@@ -2050,25 +1899,6 @@ class SilverTable:
 
         fields = [f for f in df.schema.fields if f.name != "_bucket"]
         return json.dumps(StructType(fields).jsonValue())
-
-    @staticmethod
-    def _stamp_features(mf: dict) -> dict:
-        feats = []
-        if mf.get("deltas"):
-            feats.append("mor")
-        if mf.get("dvs"):
-            feats.append("dv")
-        if mf.get("colmap"):
-            feats.append("colmap")
-        if feats:
-            mf["features"] = feats
-        else:
-            mf.pop("features", None)
-        return mf
-
-    def _write_manifest(self, gen_dir: str, mf: dict) -> None:
-        with open(os.path.join(gen_dir, "manifest.json"), "w") as f:
-            json.dump(self._stamp_features(mf), f)
 
     def _manifest_raw(self, generation: str) -> dict:
         return commitlog.manifest(self.path, generation)
@@ -2209,28 +2039,12 @@ class SilverTable:
             return "double"
         return None
 
-    def _claim_generation(self) -> tuple[str, str]:
-        """Reserve a fresh generation dir name.  ``mkdir`` is the atomic
-        claim — concurrent writers in the same millisecond get distinct
-        names instead of clobbering each other's data."""
-        ts = int(time.time() * 1000)
-        seq = 0
-        while True:
-            gen = f"gen-{ts}" if seq == 0 else f"gen-{ts}-{seq:03d}"
-            out = os.path.join(self.path, gen)
-            try:
-                os.makedirs(out)
-                return gen, out
-            except FileExistsError:
-                seq += 1
-
     # -- merge ----------------------------------------------------------
 
     def merge(
         self,
         batch: DataFrame,
         collect_metrics: bool = False,
-        max_commit_attempts: int = 6,
         on_violation: str = "fail",
         write_mode: str = "cow",
         _locked: bool = False,
@@ -2242,15 +2056,12 @@ class SilverTable:
         unique source keys (SURVEY §7.2).  Only buckets containing
         batch keys are read and rewritten.
 
-        CONCURRENT writers are safe: the commit is an optimistic
-        compare-and-swap on the ``_CURRENT`` pointer.  A writer that
-        loses the race removes its orphan generation and re-merges
-        against the winner's state (versioned MERGE is commutative, so
-        the retry converges).  Optimistic losers escalate: the final
-        attempt holds the commit lock for its whole read-merge-commit
-        span, so heavy write contention degrades to serialized merges
-        instead of livelocking (the Delta protocol's conflict-retry,
-        with a pessimistic backstop).
+        CONCURRENT writers are safe: the merge commits through
+        ``_commit``.  A lost attempt whose buckets the winner left
+        alone is spliced onto the winner's manifest (no second Spark
+        job); otherwise it re-merges against the winner's state
+        (versioned MERGE is commutative, so the retry converges), and
+        the final attempt holds the commit lock for its whole span.
 
         CHECK constraints (``add_check``) are enforced on the batch
         once, before any commit attempt: ``on_violation`` is "fail"
@@ -2278,21 +2089,20 @@ class SilverTable:
             raise ValueError(f"unknown write_mode {write_mode!r}")
         batch, synthetic = self._apply_generated(batch)
         # Persist only when something reads the batch more than once:
-        # a CHECK/generated-column validation pass, merge metrics, or
-        # a COW merge against existing state (touched-bucket pre-scan
-        # + rewrite).  A merge that never reads stored state (MOR, or
-        # the first merge into an empty table) runs as ONE pass: the
-        # batch streams straight into the bucket write and the touched
-        # buckets fall out of the written dirs — at scale one corpus
-        # pass instead of two (and no cache of the full batch).
-        cached = None
-        if (
-            bool(synthetic)
-            or bool(self.constraints())
-            or collect_metrics
-            or (write_mode == "cow" and self.current_generation() is not None)
-        ):
-            cached = batch = batch.persist()
+        # a CHECK/generated-column validation pass, or a two-pass
+        # attempt (merge metrics, or a COW merge against existing
+        # state: touched-bucket pre-scan + rewrite) — one
+        # materialization, so a nondeterministic lineage cannot diverge
+        # between the passes.  A merge that never reads stored state
+        # (MOR, or the first merge into an empty table) runs as ONE
+        # pass: the batch streams straight into the bucket write and
+        # the touched buckets fall out of the written dirs — at scale
+        # one corpus pass instead of two (and no cache of the batch).
+        cache: list[DataFrame] = []
+        if synthetic or self.constraints():
+            batch = batch.persist()
+            cache.append(batch)
+        metrics = None
         try:
             batch, quarantined = self._enforce_constraints(
                 batch, on_violation, extra=synthetic
@@ -2302,114 +2112,59 @@ class SilverTable:
                     os.path.join(self.path, "_quarantine")
                 )
             batch = batch.withColumn("_bucket", self._bucket_col())
+
+            def build(parent, raw, gen, out):
+                nonlocal batch, metrics
+                nb = raw.get("n_buckets")
+                if nb and nb != self.n_buckets:
+                    # a re-bucketing compact() committed a different
+                    # bucket count (possibly after this handle opened):
+                    # adopt it and re-bucket the batch, or keys would
+                    # land in wrong buckets
+                    self.n_buckets = nb
+                    batch = batch.withColumn("_bucket", self._bucket_col())
+                single_pass = not collect_metrics and (
+                    write_mode == "mor" or parent is None
+                )
+                if not single_pass and not cache:
+                    batch = batch.persist()
+                    cache.append(batch)
+                replaced, metrics = self._merge_attempt(
+                    batch, parent, raw, gen, out, single_pass,
+                    collect_metrics, write_mode,
+                )
+                return replaced
+
             # _locked=True: the caller already holds the commit lock
-            # (replay_quarantine's read-merge-rewrite span) — go
-            # straight to the pessimistic attempt; re-acquiring would
-            # self-deadlock and optimistic CAS is pointless under an
-            # exclusively-held lock
-            for _ in range(0 if _locked else max(max_commit_attempts - 1, 0)):
-                done, metrics = self._merge_attempt(
-                    batch,
-                    collect_metrics,
-                    write_mode=write_mode,
-                    batch_cached=cached is not None,
-                )
-                if done:
-                    return metrics
-                if cached is None:
-                    # lost the commit race: retries merge against the
-                    # winner's state (a pre-scan pass) — cache the
-                    # batch for them
-                    cached = batch = batch.persist()
-            lock = (
-                None if _locked else self._acquire_commit_lock(timeout=300.0)
-            )
-            try:
-                done, metrics = self._merge_attempt(
-                    batch,
-                    collect_metrics,
-                    locked=True,
-                    write_mode=write_mode,
-                    batch_cached=cached is not None,
-                )
-            finally:
-                if lock is not None:
-                    self._release_commit_lock(lock)
-            if done:
-                return metrics
-            raise CommitConflict(
-                f"merge lost the commit race {max_commit_attempts} times"
-            )
+            # (replay_quarantine's read-merge-rewrite span)
+            self._commit("MERGE", build, locked=_locked, rebase=True)
+            return metrics
         finally:
-            if cached is not None:
-                cached.unpersist()
+            for df in cache:
+                df.unpersist()
 
     def _merge_attempt(
         self,
         batch: DataFrame,
+        parent: str | None,
+        raw: dict,
+        gen: str,
+        out: str,
+        single_pass: bool,
         collect_metrics: bool,
-        locked: bool = False,
-        write_mode: str = "cow",
-        batch_cached: bool = True,
-    ) -> tuple[bool, MergeMetrics | None]:
-        # _local_cache: the inner attempt appends any persist() it
-        # takes out itself (the merge()-raced-into-two-pass case, r10
-        # ADVICE) so it is always released, on every return/raise path
-        local_cache: list[DataFrame] = []
-        try:
-            return self._merge_attempt_inner(
-                batch,
-                collect_metrics,
-                locked=locked,
-                write_mode=write_mode,
-                batch_cached=batch_cached,
-                _local_cache=local_cache,
-            )
-        finally:
-            for df in local_cache:
-                df.unpersist()
-
-    def _merge_attempt_inner(
-        self,
-        batch: DataFrame,
-        collect_metrics: bool,
-        locked: bool = False,
-        write_mode: str = "cow",
-        batch_cached: bool = True,
-        _local_cache: list | None = None,
-    ) -> tuple[bool, MergeMetrics | None]:
-        import shutil
-
-        persisted = self._persisted_n_buckets()
-        if persisted is not None and persisted != self.n_buckets:
-            # a re-bucketing compact() committed a different bucket
-            # count (possibly after this handle opened): adopt it and
-            # re-bucket the batch, or keys would land in wrong buckets
-            self.n_buckets = persisted
-            batch = batch.withColumn("_bucket", self._bucket_col())
-        current_gen = self.current_generation()
-        prev_manifest = self.manifest(current_gen) if current_gen else {}
-        prev_raw = self._manifest_raw(current_gen) if current_gen else {}
-        prev_deltas = prev_raw.get("deltas", {})
+        write_mode: str,
+    ) -> tuple[dict | None, MergeMetrics | None]:
+        """One merge attempt against ``parent``: writes the touched
+        buckets under ``out`` and returns the manifest keys it replaces
+        (None for an empty batch) plus the merge metrics."""
+        prev_manifest = raw.get("buckets", {})
+        prev_deltas = raw.get("deltas", {})
 
         # single-pass: when no stored state is read (MOR never does;
         # an empty table has none) and no metrics are wanted, skip the
         # touched-bucket pre-scan entirely — the batch streams straight
         # into the partitioned write and the touched buckets fall out
         # of the written dirs (one pass over the batch, not two)
-        single_pass = not collect_metrics and (
-            write_mode == "mor" or current_gen is None
-        )
-        if not single_pass and not batch_cached and _local_cache is not None:
-            # merge() skipped the persist because the table looked
-            # empty (single-pass eligible) when it checked; a
-            # concurrent writer landed the first commit since, so this
-            # attempt walks the two-pass COW path — persist HERE so
-            # the touched-bucket pre-scan and the write read one
-            # materialization (a nondeterministic batch lineage could
-            # otherwise diverge between the two passes; r10 ADVICE)
-            batch = batch.persist()
-            _local_cache.append(batch)
         if single_pass:
             touched: list | None = None
             touched_set: set = set()
@@ -2431,7 +2186,7 @@ class SilverTable:
                     if collect_metrics
                     else None
                 )
-                return True, metrics
+                return None, metrics
             touched_set = {str(b) for b in touched}
             existing_touched = [
                 b
@@ -2450,7 +2205,7 @@ class SilverTable:
                 # copy-on-write: reconciled state read absorbs any
                 # deltas the touched buckets carry
                 state = self._bucket_state(
-                    current_gen, existing_touched
+                    parent, existing_touched
                 ).withColumn("_bucket", self._bucket_col())
                 state, batch = self._align_schemas(state, batch)
                 merged = merge_into(
@@ -2469,7 +2224,7 @@ class SilverTable:
                     )
                 elif existing_touched:
                     old = self._bucket_state(
-                        current_gen, existing_touched
+                        parent, existing_touched
                     ).select("_id", F.col("version_").alias("_old_v"))
                 else:
                     old = batch.select(
@@ -2503,9 +2258,8 @@ class SilverTable:
                     unchanged=counts.unch or 0,
                 )
 
-        gen, out = self._claim_generation()
         cmap_new, retired = self._evolve_colmap(
-            prev_raw, [c for c in merged.columns if c != "_bucket"]
+            raw, [c for c in merged.columns if c != "_bucket"]
         )
         # one shuffle on the bucket id clusters the write so partitionBy
         # emits a contiguous file group per bucket; untouched buckets
@@ -2529,11 +2283,9 @@ class SilverTable:
         if touched is None:
             if not written:
                 # empty batch discovered post-write (single-pass):
-                # nothing to merge — release the claimed generation
-                # instead of committing a no-op (streaming no-op
-                # trigger contract)
-                shutil.rmtree(out, ignore_errors=True)
-                return True, None
+                # nothing to merge — the no-op releases the claimed
+                # generation (streaming no-op trigger contract)
+                return None, None
             touched = sorted(written, key=int)
             touched_set = set(written)
         if write_mode == "mor":
@@ -2559,7 +2311,7 @@ class SilverTable:
                 for b, ds in prev_deltas.items()
                 if b not in touched_set
             }
-        prev_dvs = prev_raw.get("dvs", {})
+        prev_dvs = raw.get("dvs", {})
         if write_mode == "mor":
             # delta layers stack ABOVE the overlaid base: deletion
             # vectors keep applying to the files they mark
@@ -2575,9 +2327,9 @@ class SilverTable:
         # stats maintenance is O(touched), like the merge: rewritten
         # buckets harvest fresh footer stats, untouched buckets carry
         # their previous entry (same bytes -> same stats)
-        prev_stats = prev_raw.get("stats", {})
-        prev_fstats = prev_raw.get("fstats", {})
-        prev_blooms = prev_raw.get("blooms", {})
+        prev_stats = raw.get("stats", {})
+        prev_fstats = raw.get("fstats", {})
+        prev_blooms = raw.get("blooms", {})
         untouched = [
             b for b in set(buckets) | set(deltas) if b not in touched_set
         ]
@@ -2616,7 +2368,7 @@ class SilverTable:
         # schema (untouched buckets still hold the column), and a
         # widened column type must be adopted table-wide so old narrow
         # files read under the promoted type
-        prev_schema = self.table_schema(current_gen) if current_gen else None
+        prev_schema = self.table_schema(parent) if parent else None
         if prev_schema is not None:
             schema_json = self._merged_schema_json(prev_schema, merged.schema)
             if schema_json is None:  # exotic prev-only column types
@@ -2625,7 +2377,7 @@ class SilverTable:
                 schema_json = self._schema_json(schema_df)
         else:
             schema_json = self._schema_json(merged)
-        mf = {
+        replaced = {
             "buckets": buckets,
             "n_buckets": self.n_buckets,
             "schema": schema_json,
@@ -2634,104 +2386,9 @@ class SilverTable:
             "blooms": blooms,
             "deltas": deltas,
             "dvs": dvs_new,
-            "commit": {
-                "operation": "MERGE",
-                "ts_ms": int(time.time() * 1000),
-                "touched_buckets": len(touched),
-                "mode": write_mode,
-            },
+            "commit": {"touched_buckets": len(touched), "mode": write_mode},
         }
         if cmap_new is not None:
-            mf["colmap"] = cmap_new
-            mf["retired"] = retired
-        self._write_manifest(out, mf)
-        if self._try_commit(current_gen, gen, locked=locked):
-            return True, metrics
-        # lost the race — but if the winner(s) touched DISJOINT buckets,
-        # our merged data is still exactly right: splice our touched
-        # entries onto the winner's manifest and commit that (O(metadata)
-        # rebase — Delta's file-level conflict resolution) instead of
-        # re-running the whole merge job
-        if not locked and self._try_rebase_commit(
-            current_gen, gen, out, touched_set
-        ):
-            return True, metrics
-        # genuine conflict: roll back our orphan generation and re-merge
-        # on top of the winner's state
-        shutil.rmtree(out, ignore_errors=True)
-        return False, None
-
-    def _try_rebase_commit(
-        self,
-        read_gen: str | None,
-        gen: str,
-        out: str,
-        touched_set: set,
-        max_attempts: int = 4,
-    ) -> bool:
-        """Conflict resolution for a lost commit race: when every bucket
-        we touched is UNCHANGED between our read snapshot and the
-        current winner (bases, deltas, and schema all equal), our merge
-        result is still the correct post-image for those buckets — so
-        rebase: take the winner's manifest, overwrite our touched
-        buckets' entries (data refs + stats + blooms) with ours, and
-        CAS again.  Anything else (overlapping buckets, OPTIMIZE/
-        RESTORE in between, schema drift) returns False and the caller
-        falls back to a full re-merge."""
-        ours = commitlog.load(self.path, gen)
-        snap = self._manifest_raw(read_gen) if read_gen else {}
-        for _ in range(max_attempts):
-            winner = self.current_generation()
-            if winner in (read_gen, gen) or winner is None:
-                return False
-            try:
-                wr = self._manifest_raw(winner)
-            except FileNotFoundError:
-                return False
-            if wr.get("schema") != snap.get("schema"):
-                return False  # concurrent schema change: re-merge
-            if wr.get("colmap") != snap.get("colmap") or wr.get(
-                "n_buckets"
-            ) != snap.get("n_buckets"):
-                # concurrent rename/drop or re-bucketing: our written
-                # files don't match the winner's physical layout
-                return False
-            wb, wd = wr.get("buckets", {}), wr.get("deltas", {})
-            sb, sd = snap.get("buckets", {}), snap.get("deltas", {})
-            wv, sv = wr.get("dvs", {}), snap.get("dvs", {})
-            if any(
-                wb.get(b) != sb.get(b)
-                or wd.get(b) != sd.get(b)
-                or wv.get(b) != sv.get(b)
-                for b in touched_set
-            ):
-                return False  # true overlap: winner moved our buckets
-            rebased = {
-                "buckets": dict(wb),
-                "deltas": dict(wd),
-                "dvs": dict(wv),
-                "n_buckets": self.n_buckets,
-                "schema": ours.get("schema", wr.get("schema")),
-                "stats": dict(wr.get("stats", {})),
-                "fstats": dict(wr.get("fstats", {})),
-                "blooms": dict(wr.get("blooms", {})),
-                "commit": {
-                    **ours.get("commit", {}),
-                    "rebased_on": winner,
-                },
-            }
-            for carried in ("colmap", "retired"):
-                if carried in wr:
-                    rebased[carried] = wr[carried]
-            for b in touched_set:
-                for key in (
-                    "buckets", "deltas", "dvs", "stats", "fstats", "blooms",
-                ):
-                    if b in ours.get(key, {}):
-                        rebased[key][b] = ours[key][b]
-                    else:
-                        rebased[key].pop(b, None)
-            self._write_manifest(out, rebased)
-            if self._try_commit(winner, gen):
-                return True
-        return False
+            replaced["colmap"] = cmap_new
+            replaced["retired"] = retired
+        return replaced, metrics

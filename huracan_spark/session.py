@@ -18,6 +18,19 @@ __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 90g.  A heap larger
+    than the host lets the JVM grow until the kernel OOM-kills it (and
+    the Python session with it); a heap sized to the host fails inside
+    the JVM instead, with room left for Python workers and a second
+    JVM."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "90g"
+    return f"{min(90 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "huracan-spark",
     shuffle_partitions: int | None = None,
@@ -89,7 +102,8 @@ def get_spark(
             builder.master(f"local[{cpus}]")
             .config(
                 "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory(),
             )
             # Whole-stage codegen emits a fresh class per plan; a long
             # session running hundreds of distinct queries fills the

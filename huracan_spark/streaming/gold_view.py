@@ -78,12 +78,15 @@ def run_gold_view(
         old = data_dir + ".old"
         if not os.path.isdir(data_dir) and os.path.isdir(old):
             os.rename(old, data_dir)  # crashed mid-swap: recover
-        view = (
-            batch_df.sparkSession.read.parquet(data_dir)
-            if os.path.isdir(data_dir)
-            else None
-        )
-        folded = fold_changes(view, batch_df, group_col, value_col)
+        folded = fold_changes(None, batch_df, group_col, value_col)
+        if os.path.isdir(data_dir):
+            # the view's schema is the fold's output schema, known from
+            # analysis alone: reading with it skips the 1-task parquet
+            # schema-inference job per trigger
+            view = batch_df.sparkSession.read.schema(folded.schema).parquet(
+                data_dir
+            )
+            folded = fold_changes(view, batch_df, group_col, value_col)
         tmp = data_dir + ".tmp"
         folded.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(old, ignore_errors=True)

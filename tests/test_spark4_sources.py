@@ -466,6 +466,41 @@ def test_gold_view_and_refresh_view_fold_a_restore_drop(spark, tmp_path):
     assert _snap(refreshed) == want
 
 
+def test_gold_view_fold_into_an_existing_view_runs_no_extra_job(
+    spark, tmp_path
+):
+    """Folding a commit into an existing gold view reads the view with
+    the fold's own schema: no parquet schema-inference job, so the
+    catch-up run costs no more Spark jobs than the run that created the
+    view (streaming runs put their jobs in the run id's job group)."""
+    import time as _time
+
+    from huracan_spark.pipeline.silver import SilverTable
+    from huracan_spark.streaming.gold_view import read_gold_view, run_gold_view
+
+    t = SilverTable(spark, str(tmp_path / "t"), n_buckets=2)
+    rows = lambda data: spark.createDataFrame(
+        data, "_id string, version_ long, deleted boolean, grp string, val long"
+    )
+    t.merge(rows([("a", 1, False, "g1", 10), ("b", 1, False, "g2", 20)]))
+    view, ck = str(tmp_path / "gold"), str(tmp_path / "ck")
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    for batch in ([("c", 1, False, "g1", 5)], []):
+        q = run_gold_view(spark, t.path, view, "grp", "val", ck)
+        q.awaitTermination(120)
+        jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
+        _time.sleep(0.002)
+        if batch:
+            t.merge(rows(batch))
+    assert jobs[1] <= jobs[0], jobs
+    got = sorted(
+        (r.grp, r.n_rows, r.sum_value)
+        for r in read_gold_view(spark, view).collect()
+    )
+    assert got == [("g1", 2, 15), ("g2", 1, 20)]
+
+
 def test_cdf_stream_reconstructs_state_through_dml_optimize_restore(
     spark, tmp_path
 ):
