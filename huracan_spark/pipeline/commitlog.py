@@ -127,6 +127,20 @@ def manifest(path: str, generation: str) -> dict:
     return raw
 
 
+def schema(path: str, generation: str) -> dict:
+    """The generation's committed table schema, as Spark StructType
+    JSON, gated.  Every writer commits one; a manifest without it
+    predates the format and is refused."""
+    sj = manifest(path, generation).get("schema")
+    if sj is None:
+        raise ValueError(
+            f"generation {generation} has no committed schema: its "
+            "manifest predates the current format, which every reader "
+            "now requires"
+        )
+    return json.loads(sj)
+
+
 def refs(path: str, generation: str) -> Refs:
     """The generation's (buckets, deltas, dvs) reference maps, gated."""
     return refs_of(manifest(path, generation))

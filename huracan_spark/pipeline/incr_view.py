@@ -19,10 +19,10 @@ and signs each row's payload:
 
 Tombstone payloads carry no live mass and are filtered first.  The
 gold stream (``streaming/gold_view.py``) folds its micro-batches with
-it; ``refresh_view`` folds the batch ``SilverTable.diff`` between two
-generations with it.  The view is itself a tiny grouped table, so a
-refresh is a join-free union + re-aggregate over |groups| + |delta|
-rows.
+it; ``refresh_view`` folds ``SilverTable.changes`` between two
+generations — the batch twin of the stream's rows — with it.  The view
+is itself a tiny grouped table, so a refresh is a join-free union +
+re-aggregate over |groups| + |delta| rows.
 """
 
 from __future__ import annotations
@@ -95,34 +95,10 @@ def refresh_view(
     group_col: str,
     value_col: str,
 ) -> DataFrame:
-    """Fold the gen_old -> gen_new change feed into ``view``.
-
-    Reads ONLY the changed buckets: ``SilverTable.diff`` names the
-    changed keys, whose old rows become preimages (``drop`` for a key
-    that vanished) and whose new rows become postimages, all folded by
-    ``fold_changes`` — never a table scan."""
-    cdf = silver.diff(gen_old, gen_new)
-    if cdf is None:
-        return view
-    keys = cdf.select("_id", "change_type")
-    changed = silver.changed_buckets(gen_old, gen_new)
-    cols = ["_id", group_col, value_col, "deleted"]
-    kind = F.col("change_type")
-    pre = F.when(kind == "drop", kind).otherwise(
-        F.concat(kind, F.lit("_preimage"))
-    )
-    post = F.when(kind == "update", F.lit("update_postimage")).otherwise(kind)
-    changes = None
-    for gen, label in ((gen_old, pre), (gen_new, post)):
-        # _bucket_state reconciles merge-on-read deltas and maps
-        # physical column names back to logical (column mapping)
-        state = silver._bucket_state(gen, changed)
-        if state is None:
-            continue
-        side = state.select(*cols).join(keys, "_id").select(
-            group_col, value_col, "deleted", label.alias("_change_type")
-        )
-        changes = side if changes is None else changes.unionByName(side)
+    """Fold the gen_old -> gen_new change rows (``SilverTable.changes``,
+    which reads only the changed buckets, each side once) into
+    ``view`` — never a table scan."""
+    changes = silver.changes(gen_old, gen_new)
     if changes is None:
         return view
     return fold_changes(view, changes, group_col, value_col)

@@ -35,6 +35,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from huracan_spark.operators.compaction import latest_state, merge_into
@@ -225,17 +226,14 @@ class SilverTable:
     def history(self) -> list[dict]:
         """Commit log, newest first (the DESCRIBE HISTORY analog): one
         entry per committed generation with the operation that produced
-        it and its commit metadata.  Generations from before this
-        feature report operation "unknown"."""
+        it and its commit metadata."""
         out = []
         for g in reversed(self.generations()):
             try:
                 m = commitlog.load(self.path, g)
             except FileNotFoundError:
                 continue
-            entry = {"generation": g}
-            entry.update(m.get("commit", {"operation": "unknown"}))
-            out.append(entry)
+            out.append({"generation": g, **m["commit"]})
         return out
 
     def detail(self) -> dict:
@@ -247,24 +245,15 @@ class SilverTable:
         if gen is None:
             return {"location": self.path, "current_generation": None}
         manifest = self.manifest(gen)
-        n_files = 0
-        n_bytes = 0
-        for rel in set(self._all_rels(gen)):
-            d = os.path.join(self.path, rel)
-            for fn in os.listdir(d):
-                p = os.path.join(d, fn)
-                if os.path.isfile(p) and fn.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(p)
-        schema = self.table_schema(gen)
+        entries = self._file_entries(gen)
         return {
             "location": self.path,
             "current_generation": gen,
             "n_buckets": self.n_buckets,
             "populated_buckets": len(manifest),
-            "num_files": n_files,
-            "size_bytes": n_bytes,
-            "columns": [f.name for f in schema.fields] if schema else None,
+            "num_files": len(entries),
+            "size_bytes": sum(e[4] for e in entries),
+            "columns": self.table_schema(gen).fieldNames(),
             "num_commits": len(self.history()),
             "stats_buckets": len(self.bucket_stats(gen)),
             "file_stats_buckets": len(self.file_stats(gen)),
@@ -289,72 +278,115 @@ class SilverTable:
             commitlog.refs(self.path, gen_new),
         )
 
-    def diff(self, gen_old: str, gen_new: str) -> DataFrame | None:
-        """Change data feed between two generations: per changed key,
-        ``change_type`` in (insert, update, delete) + old/new versions.
+    def changes(self, gen_old: str, gen_new: str) -> DataFrame | None:
+        """Full-payload change rows between two generations, in the
+        vocabulary of the ``silver_cdf`` stream with preimages on (its
+        Spark twin): the table's columns as ``gen_new`` names them, plus
+        ``_change_type`` and ``_old_version``.  A changed key yields
 
-        Only buckets whose file changed between the manifests are read
-        (``changed_buckets``); within those, rows whose version is
-        unchanged are filtered out — so the cost scales with the DELTA,
-        not the table.  Tombstone arrivals classify as ``delete``;
-        keys vanish from state never (delete is final, K2), so a
-        new-side null is impossible by construction and surfaces as
-        ``drop`` for auditability rather than being silently skipped.
-        Returns None when no bucket differs."""
+        - ``insert`` (no old row), or ``delete`` for a tombstone arrival;
+        - ``update_preimage`` + ``update_postimage``;
+        - ``delete_preimage`` + ``delete`` (tombstone postimage);
+        - ``drop`` carrying the OLD payload when the key vanished from
+          the state (a RESTORE to before its insert).
+
+        A key changed iff its version or its ``deleted`` flag differs
+        (an equal-version tombstone flip changes state too).  Each side's
+        reconciled state is read once, over the changed buckets only
+        (``changed_buckets``), and both meet in one shuffle on ``_id``,
+        so the cost scales with the delta, not the table.  Returns None
+        when no bucket differs."""
         changed = self.changed_buckets(gen_old, gen_new)
         if not changed:
             return None
-        cols = ["_id", "version_", "deleted"]
-        old_df = self._bucket_state(gen_old, changed)
-        new_df = self._bucket_state(gen_new, changed)
-        if old_df is None and new_df is None:
+        schema = self.table_schema(gen_new)
+        old = self._bucket_state(gen_old, changed)
+        new = self._bucket_state(gen_new, changed)
+        if old is None and new is None:
             return None
-        old = (
-            old_df.select(*cols)
-            if old_df is not None
-            else new_df.select(*cols).limit(0)
-        )
-        new = (
-            new_df.select(*cols)
-            if new_df is not None
-            else old_df.select(*cols).limit(0)
-        )
-        o = old.select(
-            F.col("_id"),
-            F.col("version_").alias("old_version"),
-            F.col("deleted").alias("old_deleted"),
-        )
-        n = new.select(
-            F.col("_id"),
-            F.col("version_").alias("new_version"),
-            F.col("deleted").alias("new_deleted"),
-        )
-        j = o.join(n, "_id", "full_outer")
-        change = (
-            F.when(F.col("new_version").isNull(), F.lit("drop"))
-            .when(
-                F.col("old_version").isNull(),
-                F.when(F.col("new_deleted"), F.lit("delete")).otherwise(
-                    F.lit("insert")
-                ),
+        if new is None:
+            new = self.spark.createDataFrame([], schema)
+        if old is None:
+            old = self.spark.createDataFrame([], schema)
+        else:
+            # the old rows under gen_new's names and types: physical
+            # names are immutable, so a rename maps through them and a
+            # dropped-then-re-added column reads null, never the dropped
+            # data (the stream decodes every generation the same way)
+            old_cmap = self.colmap(gen_old) or {}
+            new_cmap = self.colmap(gen_new) or {}
+            by_phys = {old_cmap.get(c, c): c for c in old.columns}
+            old = old.select(
+                *[
+                    (
+                        F.col(by_phys[new_cmap.get(f.name, f.name)])
+                        if new_cmap.get(f.name, f.name) in by_phys
+                        else F.lit(None)
+                    )
+                    .cast(f.dataType)
+                    .alias(f.name)
+                    for f in schema.fields
+                ]
             )
-            .when(
-                F.col("new_deleted") & ~F.coalesce(F.col("old_deleted"), F.lit(False)),
-                F.lit("delete"),
+        # one shuffle of both sides (not a join: the rows themselves are
+        # the output, so unused payload columns prune from the scans).
+        # A key has at most one row per side; every row sees both
+        # sides' version and flag
+        cols = schema.fieldNames()
+        side = F.col("_side")
+        w = Window.partitionBy("_id")
+
+        def at(s, c):
+            return F.max(F.when(side == s, F.col(c))).over(w)
+
+        both = (
+            old.withColumn("_side", F.lit(0))
+            .unionByName(new.select(*cols).withColumn("_side", F.lit(1)))
+            .withColumns(
+                {
+                    "_ov": at(0, "version_"),
+                    "_nv": at(1, "version_"),
+                    "_od": at(0, "deleted"),
+                    "_nd": at(1, "deleted"),
+                }
             )
+        )
+        ov, nv, od, nd = (F.col(c) for c in ("_ov", "_nv", "_od", "_nd"))
+        fresh, gone = ov.isNull(), nv.isNull()
+        kind = (
+            F.when(gone, F.lit("drop"))
+            .when(fresh, F.when(nd, F.lit("delete")).otherwise(F.lit("insert")))
+            .when(nd & ~F.coalesce(od, F.lit(False)), F.lit("delete"))
             .otherwise(F.lit("update"))
         )
-        return (
-            j.filter(
-                F.col("old_version").isNull()
-                | F.col("new_version").isNull()
-                | (F.col("new_version") != F.col("old_version"))
-                # an equal-version tombstone flip (late delete carrying
-                # the stored version) changes state without changing the
-                # version — the CDF must not be blind to it
-                | ~F.col("new_deleted").eqNullSafe(F.col("old_deleted"))
-            )
-            .select("_id", change.alias("change_type"), "old_version", "new_version")
+        label = F.when(
+            side == 0,
+            F.when(gone, kind).otherwise(F.concat(kind, F.lit("_preimage"))),
+        ).otherwise(
+            F.when(kind == "update", F.lit("update_postimage")).otherwise(kind)
+        )
+        return both.filter(
+            fresh | gone | (nv != ov) | ~nd.eqNullSafe(od)
+        ).select(*cols, label.alias("_change_type"), ov.alias("_old_version"))
+
+    def diff(self, gen_old: str, gen_new: str) -> DataFrame | None:
+        """Change data feed between two generations: per changed key,
+        ``change_type`` in (insert, update, delete, drop) + old/new
+        versions — the ``changes`` rows without their preimages.
+        ``drop`` marks a key that vanished from the state, which a
+        RESTORE to before the key's insert does.  Returns None when no
+        bucket differs."""
+        ch = self.changes(gen_old, gen_new)
+        if ch is None:
+            return None
+        kind = F.col("_change_type")
+        return ch.filter(~kind.endswith("_preimage")).select(
+            "_id",
+            F.when(kind == "update_postimage", F.lit("update"))
+            .otherwise(kind)
+            .alias("change_type"),
+            F.col("_old_version").alias("old_version"),
+            F.when(kind != "drop", F.col("version_")).alias("new_version"),
         )
 
     def _bucket_col(self):
@@ -441,11 +473,8 @@ class SilverTable:
         # only consultable when the column's string cast is stable
         # against the probe value's str() (see bloom._probe_ok) — and
         # type widening can change a column's cast family later
-        committed = self.table_schema(gen)
-        types = None
-        if committed is not None:
-            phys = self._physical_schema(committed, cmap)
-            types = {f.name: f.dataType.simpleString() for f in phys.fields}
+        phys = self._physical_schema(self.table_schema(gen), cmap)
+        types = {f.name: f.dataType.simpleString() for f in phys.fields}
         kept, skipped = [], []
         for b, rel in sorted(manifest.items()):
             probe = filters
@@ -502,75 +531,22 @@ class SilverTable:
     def read_where(
         self, filters, generation: str | None = None
     ) -> DataFrame | None:
-        """Stats-pruned read: buckets whose footer stats prove the
-        conjunction can't match are never opened (Delta data skipping);
-        the exact predicate is still applied to whatever is read, so
-        results equal ``read().filter(...)`` row-for-row."""
+        """Stats-pruned read: buckets and files whose footer stats prove
+        the conjunction can't match are never opened (Delta data
+        skipping; ``prune_plan``); the exact predicate is then applied
+        to the reconciled rows of what is read, so results equal
+        ``read().filter(...)`` row-for-row.  Merge-on-read and
+        deletion-vector buckets prune whole-bucket only and resolve
+        BEFORE the filter (a stale version may match while the latest
+        doesn't; an overlaid tombstone must not read back live)."""
         gen = generation or self.current_generation()
         if gen is None:
             return None
-        deltas = self.deltas(gen)
-        dvs = self.dvs(gen)
-        cmap = self.colmap(gen)
-        schema = self.table_schema(gen)
-        phys_schema = self._physical_schema(schema, cmap)
-        pred = skipping.filters_to_column(filters)
-        reconciling = set(deltas) | set(dvs)
-        if reconciling:
-            # merge-on-read / deletion-vector buckets: the predicate
-            # applies AFTER reconciliation/overlay (a stale version may
-            # match while the latest doesn't; an overlaid tombstone
-            # must not read back live).  Copy-on-write buckets keep
-            # full file-level pruning; reconciling buckets prune
-            # whole-bucket only (see prune_plan) and resolve before
-            # the filter — sound, because reconciliation selects
-            # stored rows (the overlay only flips deleted/version_).
-            manifest = self.manifest(gen)
-            kept, _ = self.prune_plan(filters, gen)
-            rec_rels = {
-                r
-                for b in reconciling
-                for r in ([manifest[b]] if b in manifest else [])
-                + deltas.get(b, [])
-            }
-            cow_paths = [p for p in kept if p not in rec_rels]
-            rec_survivors = [
-                b
-                for b in sorted(reconciling)
-                if b in manifest and manifest[b] in kept
-            ]
-            parts = []
-            if cow_paths:
-                parts.append(
-                    self._to_logical(
-                        self._read_buckets(cow_paths, schema=phys_schema),
-                        cmap,
-                    ).filter(pred)
-                )
-            if rec_survivors:
-                parts.append(
-                    self._bucket_state(
-                        gen, rec_survivors, schema=schema
-                    ).filter(pred)
-                )
-            if not parts:
-                if schema is None:
-                    return self.read(gen).filter(pred)
-                return self.spark.createDataFrame([], schema)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
         kept, _ = self.prune_plan(filters, gen)
-        if not kept:
-            if schema is None:
-                # pre-schema manifest with everything pruned cannot
-                # happen (no stats -> nothing prunes); guard anyway
-                return self.read(gen).filter(pred)
-            return self.spark.createDataFrame([], schema)
-        return self._to_logical(
-            self._read_buckets(kept, schema=phys_schema), cmap
-        ).filter(pred)
+        state = self._bucket_state(gen, kept=kept)
+        if state is None:
+            return self.spark.createDataFrame([], self.table_schema(gen))
+        return state.filter(skipping.filters_to_column(filters))
 
     @staticmethod
     def _harvest_stats(out_dir: str) -> tuple[dict[str, dict], dict[str, dict]]:
@@ -974,30 +950,37 @@ class SilverTable:
         return out.select(*cols)
 
     def _bucket_state(
-        self, generation: str, bucket_ids=None, schema=None
+        self, generation: str, bucket_ids=None, kept=None
     ) -> DataFrame | None:
         """Current-state rows of the selected buckets (default: all),
         with merge-on-read deltas reconciled and deletion vectors
-        overlaid.  Copy-on-write buckets read straight through (no
-        extra shuffle); DV-only buckets add one broadcast overlay join
-        (still no shuffle — each key is stored once in a COW bucket, so
-        the overlaid row IS final); only delta'd buckets pay the
-        reconciliation reduce."""
+        overlaid — the one row reader every read goes through.
+        Copy-on-write buckets read straight through (no extra shuffle);
+        DV-only buckets add one broadcast overlay join (still no
+        shuffle — each key is stored once in a COW bucket, so the
+        overlaid row IS final); only delta'd buckets pay the
+        reconciliation reduce.  ``kept`` (``prune_plan``'s kept paths)
+        selects the buckets instead: a copy-on-write bucket then reads
+        only its kept files, a reconciling bucket is read whole."""
         manifest = self.manifest(generation)
         deltas = self.deltas(generation)
         dvs = self.dvs(generation)
         cmap = self.colmap(generation)
-        schema = self._physical_schema(
-            schema or self.table_schema(generation), cmap
-        )
-        if bucket_ids is None:
+        schema = self._physical_schema(self.table_schema(generation), cmap)
+        files = {}  # bucket id -> kept paths (every rel is gen/_bucket=K[/file])
+        for p in kept or ():
+            files.setdefault(p.split("/")[1].split("=", 1)[1], []).append(p)
+        if kept is not None:
+            ids = sorted(files)
+        elif bucket_ids is None:
             ids = sorted(set(manifest) | set(deltas))
         else:
             ids = [str(b) for b in bucket_ids]
         cow = [
-            manifest[b]
+            p
             for b in ids
             if b in manifest and b not in deltas and b not in dvs
+            for p in files.get(b, [manifest[b]])
         ]
         dv_only = [
             b for b in ids if b in dvs and b not in deltas and b in manifest
@@ -1054,20 +1037,12 @@ class SilverTable:
 
     def read_as_of(self, ts_ms: int) -> DataFrame | None:
         """Timestamp time travel (``AS OF TIMESTAMP``): read the newest
-        generation committed at or before ``ts_ms``.  Generations
-        predating commit metadata fall back to their name's embedded
-        millisecond timestamp.  Returns None if nothing was committed
-        that early."""
-        best = None
-        for e in self.history():
-            t = e.get("ts_ms")
-            if t is None:
-                stem = e["generation"].split("-", 1)[1].split("-")[0]
-                t = int(stem) if stem.isdigit() else None
-            if t is not None and t <= ts_ms:
-                best = e["generation"]
-                break  # history is newest-first
-        return self.read(generation=best) if best else None
+        generation committed at or before ``ts_ms``.  Returns None if
+        nothing was committed that early."""
+        for e in self.history():  # newest first
+            if e["ts_ms"] <= ts_ms:
+                return self.read(generation=e["generation"])
+        return None
 
     def restore(self, generation: str) -> str:
         """RESTORE analog: make ``generation`` the current state again
@@ -1087,19 +1062,13 @@ class SilverTable:
 
     def table_schema(self, generation: str | None = None):
         """The generation's committed table schema (StructType), or
-        None for pre-feature manifests."""
+        None for an empty table."""
         gen = generation or self.current_generation()
         if gen is None:
             return None
-        try:
-            sj = commitlog.load(self.path, gen).get("schema")
-        except FileNotFoundError:
-            return None
-        if sj is None:
-            return None
         from pyspark.sql.types import StructType
 
-        return StructType.fromJson(json.loads(sj))
+        return StructType.fromJson(commitlog.schema(self.path, gen))
 
     # -- column mapping (Delta columnMapping.mode=name parity) ----------
     #
@@ -1203,11 +1172,6 @@ class SilverTable:
             if parent is None:
                 raise ValueError("cannot alter the schema of an empty table")
             schema = self.table_schema(parent)
-            if schema is None:
-                raise ValueError(
-                    "pre-schema-manifest table: compact() once to commit a "
-                    "schema before altering columns"
-                )
             cmap = raw.get("colmap")
             if cmap is None:
                 # upgrade to mapping mode: identity for current columns
@@ -1306,20 +1270,13 @@ class SilverTable:
         return self._alter_schema_commit(mutate, "DROP COLUMN", column=col)
 
     def _read_buckets(
-        self, rel_paths, schema=None, with_pos: bool = False
+        self, rel_paths, schema, with_pos: bool = False
     ) -> DataFrame:
+        """The data files at ``rel_paths`` under the committed PHYSICAL
+        ``schema``, which is authoritative: files written before a
+        column evolved read it back as null, with no footer-merge job."""
         paths = [os.path.join(self.path, p) for p in rel_paths]
-        if not paths:
-            raise ValueError("empty silver manifest has no schema to read")
-        if schema is not None:
-            # the committed table schema is authoritative: buckets
-            # written before a column evolved in read it back as null,
-            # without the per-read footer-merge job mergeSchema costs
-            df = self.spark.read.schema(schema).parquet(*paths)
-        else:
-            # pre-schema-manifest fallback: merge footers across buckets
-            # so evolved columns still surface (Delta's read behavior)
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        df = self.spark.read.schema(schema).parquet(*paths)
         if with_pos:
             # deletion-vector key: the last three path components
             # (generation/_bucket=K/file.parquet) — stable under table
@@ -1596,15 +1553,23 @@ class SilverTable:
         """Metadata table of every file the generation references
         (Iceberg ``files`` / Delta DESCRIBE DETAIL inspection surface):
         ``(generation, bucket, layer, path, size_bytes, n_rows)`` where
-        layer is base/delta/dv.  Built from manifests + directory
-        listings — O(#files) metadata, no data file opened; n_rows
-        comes from the committed footer stats when present (base files
-        of stats-bearing commits), else null.  File count stays
+        layer is base/delta/dv (``_file_entries``).  File count stays
         bounded by buckets x referenced generations, which
         ``maybe_optimize`` keeps small on continuous streams."""
         gen = generation or self.current_generation()
         if gen is None:
             return None
+        return self.spark.createDataFrame(
+            self._file_entries(gen),
+            "generation string, bucket string, layer string, "
+            "path string, size_bytes long, n_rows long",
+        )
+
+    def _file_entries(self, gen: str) -> list[tuple]:
+        """``files()``'s rows, built from the manifest and directory
+        listings — O(#files) metadata, no data file opened, no Spark
+        job; n_rows comes from the committed footer stats when present
+        (base files of stats-bearing commits), else None."""
         raw = self._manifest_raw(gen)
         fstats = raw.get("fstats", {})
         entries = []
@@ -1645,11 +1610,7 @@ class SilverTable:
                 if rel not in seen:  # one sidecar can mark many buckets
                     seen.add(rel)
                     _list(rel, b, "dv")
-        return self.spark.createDataFrame(
-            entries,
-            "generation string, bucket string, layer string, "
-            "path string, size_bytes long, n_rows long",
-        )
+        return entries
 
     def count_rows(self, generation: str | None = None) -> int | None:
         """O(metadata) state row count (Delta numRecords / Iceberg
@@ -1905,7 +1866,7 @@ class SilverTable:
 
     @staticmethod
     def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """Schema evolution (Delta ``mergeSchema`` semantics): each
+        """Merge-time schema evolution (Delta semantics): each
         side's missing columns are added as typed nulls so stored state
         and an evolved batch union under one merged schema — a batch
         may ADD columns (old rows read them as null) or OMIT columns
@@ -1963,10 +1924,9 @@ class SilverTable:
         second return would carry — done purely on StructTypes.  The
         DataFrame form cost a createDataFrame plus Catalyst analyses of
         the full merge lineage PER COMMIT, all to derive a schema
-        (driver latency, guide §5).  Falls back to the DataFrame path
-        (returns None) when a prev-only column has a non-atomic type,
-        where ``lit(None).cast(simpleString)`` nullability-inside-
-        containers semantics would be fiddly to replicate exactly."""
+        (driver latency, guide §5).  A prev-only column gets the type
+        ``lit(None).cast(simpleString)`` gives it: nullable at every
+        level, metadata-free (``_nullable``)."""
         from pyspark.sql.types import (
             ArrayType,
             MapType,
@@ -1983,6 +1943,21 @@ class SilverTable:
             "double": "double",
         }
         import pyspark.sql.types as T
+
+        def _nullable(dt):
+            # what a cast to dt.simpleString() yields: the DDL parser
+            # makes every element, value and field nullable
+            if isinstance(dt, ArrayType):
+                return ArrayType(_nullable(dt.elementType), True)
+            if isinstance(dt, MapType):
+                return MapType(
+                    _nullable(dt.keyType), _nullable(dt.valueType), True
+                )
+            if isinstance(dt, StructType):
+                return StructType(
+                    [StructField(f.name, _nullable(f.dataType), True) for f in dt]
+                )
+            return dt
 
         prev = {f.name: f for f in prev_schema.fields}
         cur_names = {f.name for f in cur_schema.fields}
@@ -2014,10 +1989,7 @@ class SilverTable:
         for f in prev_schema.fields:
             if f.name in cur_names or f.name == "_bucket":
                 continue
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                return None  # exotic: take the exact DataFrame path
-            # lit(None).cast(t): nullable, metadata-free
-            fields.append(StructField(f.name, f.dataType, True))
+            fields.append(StructField(f.name, _nullable(f.dataType), True))
         return json.dumps(StructType(fields).jsonValue())
 
     _INT_CHAIN = ("tinyint", "smallint", "int", "bigint")
@@ -2368,13 +2340,10 @@ class SilverTable:
         # schema (untouched buckets still hold the column), and a
         # widened column type must be adopted table-wide so old narrow
         # files read under the promoted type
-        prev_schema = self.table_schema(parent) if parent else None
-        if prev_schema is not None:
-            schema_json = self._merged_schema_json(prev_schema, merged.schema)
-            if schema_json is None:  # exotic prev-only column types
-                empty = self.spark.createDataFrame([], prev_schema)
-                _, schema_df = self._align_schemas(empty, merged)
-                schema_json = self._schema_json(schema_df)
+        if parent:
+            schema_json = self._merged_schema_json(
+                self.table_schema(parent), merged.schema
+            )
         else:
             schema_json = self._schema_json(merged)
         replaced = {

@@ -5,8 +5,8 @@ CDF blindness to tombstone flips), and the path had zero CORRECTNESS
 exposure — pytest only.  This query closes that gap: it derives a
 deterministic two-batch change stream from the ``events`` fixture,
 drives the REAL on-disk machinery (``SilverTable.merge`` twice ->
-``diff`` between the two generations -> ``refresh_view`` folding the
-change feed into the batch-1 materialized view), and returns the
+``refresh_view`` folding ``SilverTable.changes`` between the two
+generations into the batch-1 materialized view), and returns the
 incrementally-maintained grouped view.  The DuckDB oracle computes the
 same result declaratively — final state per key via the documented
 total order ``(version, tombstone-precedence, stored-precedence)``,

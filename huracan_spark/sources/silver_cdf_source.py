@@ -16,7 +16,7 @@ information, surfaced here through Spark 4's Python DataSource API:
   diffing it against the previous one; before the first generation of
   an ``earliest`` stream the state is empty;
 - partition reads are pure pyarrow/stdlib (no SparkSession on the
-  executor), classify changes exactly like ``SilverTable.diff``
+  executor), classify changes exactly like ``SilverTable.changes``
   (insert / update / delete, plus ``drop`` when a key vanishes, e.g.
   after a RESTORE), and include equal-version tombstone flips.  A
   ``drop`` row carries the key's OLD payload, like a preimage, so a
@@ -39,7 +39,6 @@ Usage::
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -63,20 +62,13 @@ def _table_ddl(path: str) -> str:
     """DDL of the table's committed schema + CDF metadata columns.
     Read from the CURRENT generation's manifest at stream start; rows
     from generations predating an evolved column null-fill it."""
+    from pyspark.sql.types import StructType
+
     gen = commitlog.current(path)
     if gen is None:
         raise ValueError(f"silver table at {path!r} has no committed state")
-    sj = commitlog.manifest(path, gen).get("schema")
-    if sj is None:
-        # pre-schema-manifest table: minimal envelope
-        cols = "_id string, version_ bigint, deleted boolean"
-    else:
-        from pyspark.sql.types import StructType
-
-        st = StructType.fromJson(json.loads(sj))
-        cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in st.fields
-        )
+    st = StructType.fromJson(commitlog.schema(path, gen))
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in st.fields)
     return f"{cols}, {_META_DDL}"
 
 
@@ -173,7 +165,7 @@ def _load_state(table_path: str, refs, columns, colmap=None) -> dict:
 def _changes(old: dict, new: dict, cols, gen: str, preimages: bool):
     """Change rows of one bucket between two reconciled states, with
     the same changed-row predicate and classification as
-    ``SilverTable.diff``: version differs OR deleted differs."""
+    ``SilverTable.changes``: version differs OR deleted differs."""
     for _id in sorted(set(old) | set(new)):
         o, n = old.get(_id), new.get(_id)
         if (

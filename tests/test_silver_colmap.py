@@ -220,6 +220,33 @@ def test_diff_and_cdf_stream_after_rename(spark, tmp_path):
     assert snap.filter(F.col("amount").isNull()).count() == 0
 
 
+def test_changes_read_old_rows_through_physical_names(spark, tmp_path):
+    """A change range spanning a RENAME and a DROP + re-add names the
+    old rows the way the new generation does, through the immutable
+    physical names (as the CDF stream decodes them): the renamed column
+    keeps its old value in the preimage, the re-added one reads null."""
+    t = _mk(spark, tmp_path, n=2, rows=4)
+    g1 = t.current_generation()
+    t.rename_column("val", "amount")
+    t.drop_column("tag")
+    t.merge(
+        spark.createDataFrame(
+            [("k01", 2, False, 42, "fresh")],
+            "_id string, version_ long, deleted boolean, amount long, tag string",
+        )
+    )
+    rows = {
+        r._change_type: r
+        for r in t.changes(g1, t.current_generation()).collect()
+    }
+    assert set(rows) == {"update_preimage", "update_postimage"}
+    assert (rows["update_preimage"].amount, rows["update_preimage"].tag) == (1, None)
+    assert (rows["update_postimage"].amount, rows["update_postimage"].tag) == (
+        42,
+        "fresh",
+    )
+
+
 def test_rebucket_via_compact(spark, tmp_path):
     t = _mk(spark, tmp_path, n=4, rows=32)
     before = sorted(

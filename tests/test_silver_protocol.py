@@ -86,6 +86,25 @@ def test_cdf_source_manifest_loaders_share_the_feature_gate(
         cdf._table_ddl(t.path)
 
 
+def test_schema_less_manifest_refuses_with_one_error(spark, tmp_path):
+    """Every writer commits the table schema; a manifest without one
+    predates the format and every reader refuses it with the same
+    error instead of guessing the schema from the files."""
+    from huracan_spark.sources import silver_cdf_source as cdf
+
+    t = SilverTable(spark, str(tmp_path / "t"), n_buckets=2)
+    _seed(spark, t)
+    mfp = os.path.join(t.path, t.current_generation(), "manifest.json")
+    with open(mfp) as f:
+        raw = json.load(f)
+    del raw["schema"]
+    with open(mfp, "w") as f:
+        json.dump(raw, f)
+    for read in (t.table_schema, t.read, lambda: cdf._table_ddl(t.path)):
+        with pytest.raises(ValueError, match="no committed schema"):
+            read()
+
+
 def test_count_rows_matches_read_count_across_modes(spark, tmp_path):
     t = SilverTable(spark, str(tmp_path / "t"), n_buckets=4)
     _seed(spark, t, 16)

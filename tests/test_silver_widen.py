@@ -418,6 +418,20 @@ def test_merged_schema_json_matches_dataframe_path(spark, tmp_path):
             F.lit(False).alias("deleted"),
             F.lit(1).cast("smallint").alias("a"),
         ),
+        # prev-only container columns, with non-nullable elements,
+        # values and nested fields the cast path makes nullable
+        spark.range(1).select(
+            F.col("id").cast("string").alias("_id"),
+            F.lit(1).cast("bigint").alias("version_"),
+            F.lit(False).alias("deleted"),
+            F.lit(1).cast("int").alias("a"),
+            F.array(F.lit(1.0)).alias("vec"),
+            F.create_map(F.lit("k"), F.array(F.lit(1))).alias("tags"),
+            F.struct(
+                F.lit(1).alias("x"),
+                F.array(F.struct(F.lit("s").alias("y"))).alias("ys"),
+            ).alias("nested"),
+        ),
     ]
     cur_variants = [
         spark.range(1).select(
@@ -451,21 +465,36 @@ def test_merged_schema_json_matches_dataframe_path(spark, tmp_path):
             )
 
 
-def test_merged_schema_json_exotic_prev_column_falls_back(spark, tmp_path):
-    """A prev-only ARRAY column routes to the exact DataFrame path
-    (returns None) instead of guessing container nullability."""
+def test_merge_omitting_a_container_column_keeps_it_in_the_schema(
+    spark, tmp_path
+):
+    """A merge-on-read batch (merged without the stored rows) that
+    omits ARRAY/MAP/STRUCT columns commits a schema that still carries
+    them, computed on StructTypes with no DataFrame fallback: the
+    stored rows keep their values and the new rows read back null."""
     from pyspark.sql import functions as F
 
     from huracan_spark.pipeline.silver import SilverTable
 
     t = SilverTable(spark, str(tmp_path / "t2"), n_buckets=2)
-    prev = spark.range(1).select(
-        F.col("id").cast("string").alias("_id"),
-        F.lit(1).cast("bigint").alias("version_"),
-        F.array(F.lit(1.0)).alias("vec"),
+    t.merge(
+        spark.range(4).select(
+            F.concat(F.lit("k"), F.col("id").cast("string")).alias("_id"),
+            F.lit(1).cast("bigint").alias("version_"),
+            F.lit(False).alias("deleted"),
+            F.array(F.col("id").cast("double")).alias("vec"),
+            F.create_map(F.lit("k"), F.col("id")).alias("tags"),
+            F.struct(F.col("id").alias("x")).alias("nested"),
+        )
     )
-    cur = spark.range(1).select(
-        F.col("id").cast("string").alias("_id"),
-        F.lit(2).cast("bigint").alias("version_"),
+    prev = t.table_schema()
+    batch = spark.createDataFrame(
+        [("k9", 1, False)], "_id string, version_ long, deleted boolean"
     )
-    assert t._merged_schema_json(prev.schema, cur.schema) is None
+    assert t._merged_schema_json(prev, batch.schema) is not None
+    t.merge(batch, write_mode="mor")
+    got = {r._id: r for r in t.read().collect()}
+    assert t.table_schema().fieldNames() == prev.fieldNames()
+    assert got["k2"].vec == [2.0] and got["k2"].tags == {"k": 2}
+    assert got["k2"].nested.x == 2
+    assert got["k9"].vec is None and got["k9"].nested is None
