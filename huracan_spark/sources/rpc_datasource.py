@@ -61,7 +61,9 @@ class _RpcReader(DataSourceReader):
 
     def partitions(self):
         # one partition per RPC page -> pages fetch in parallel, the
-        # antithesis of the reference's serial cursor walk
+        # antithesis of the reference's serial cursor walk; each is a
+        # Python task with a fixed ~240 ms of worker CPU, so pages are
+        # worth a partition only when a fetch costs more than that
         return [_PagePartition(p) for p in range(self.n_pages)]
 
     def read(self, partition: _PagePartition):

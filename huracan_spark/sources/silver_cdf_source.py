@@ -9,12 +9,17 @@ information, surfaced here through Spark 4's Python DataSource API:
 - stream OFFSETS are generation names (the commit log positions,
   read through ``pipeline/commitlog.py`` like every other reader);
 - each micro-batch covers the generations committed since the last
-  offset and plans ONE ``InputPartition`` PER CHANGED BUCKET for the
-  whole range (manifest file-skipping, ``commitlog.changed_buckets``),
-  so a batch costs the delta, not the table.  A partition walks its
-  bucket's chain of changing generations, loading each state once and
-  diffing it against the previous one; before the first generation of
-  an ``earliest`` stream the state is empty;
+  offset and plans ONE CHAIN PER CHANGED BUCKET for the whole range
+  (manifest file-skipping, ``commitlog.changed_buckets``), so a batch
+  costs the delta, not the table.  A chain walks its bucket's changing
+  generations, loading each state once and diffing it against the
+  previous one; before the first generation of an ``earliest`` stream
+  the state is empty;
+- whole chains pack, first-fit in bucket order, into as few
+  ``InputPartition``s as ``_PARTITION_BYTES`` of referenced files
+  allows.  A Python data-source task costs a fixed ~240 ms of worker
+  CPU however little it reads, so a small batch is one task, while a
+  large one still fans out by bytes;
 - partition reads are pure pyarrow/stdlib (no SparkSession on the
   executor), classify changes exactly like ``SilverTable.changes``
   (insert / update / delete, plus ``drop`` when a key vanishes, e.g.
@@ -57,6 +62,11 @@ _META_DDL = (
     "_change_type string, _old_version bigint, _commit_generation string"
 )
 
+#: referenced file bytes one partition's chains may add up to (base +
+#: deltas + DV sidecars), Spark's ``spark.sql.files.maxPartitionBytes``
+#: default; a chain above it is planned alone
+_PARTITION_BYTES = 128 << 20
+
 
 def _table_ddl(path: str) -> str:
     """DDL of the table's committed schema + CDF metadata columns.
@@ -73,16 +83,49 @@ def _table_ddl(path: str) -> str:
 
 
 class _CdfPartition(InputPartition):
-    def __init__(self, table_path, old_refs, steps, columns, preimages, colmap):
+    def __init__(self, table_path, chains, columns, preimages, colmap):
         self.table_path = table_path
-        # the bucket's refs before the batch, then (generation, refs)
-        # for each generation in the batch that changed the bucket;
-        # refs are commitlog.bucket_refs triples
-        self.old_refs = old_refs
-        self.steps = steps
+        # one (old refs, steps) chain per changed bucket: the bucket's
+        # refs before the batch, then (generation, refs) for each
+        # generation in the batch that changed it; refs are
+        # commitlog.bucket_refs triples
+        self.chains = chains
         self.columns = columns  # LOGICAL table column names, schema order
         self.preimages = preimages
         self.colmap = colmap  # logical -> physical (column mapping)
+
+
+def _chain_bytes(table_path: str, old_refs, steps) -> int:
+    """Bytes of the parquet files a chain references, each data or
+    sidecar dir counted once."""
+    rels = dict.fromkeys(
+        rel
+        for base, deltas, dvs in (old_refs, *(refs for _, refs in steps))
+        for rel in (base, *deltas, *dvs)
+        if rel is not None
+    )
+    n = 0
+    for rel in rels:
+        with os.scandir(os.path.join(table_path, rel)) as it:
+            n += sum(
+                e.stat().st_size for e in it if e.name.endswith(".parquet")
+            )
+    return n
+
+
+def _pack(sized, budget: int) -> list[list]:
+    """First-fit in the given order: each (bytes, chain) joins the first
+    bin it fits under ``budget``; a chain above it opens its own."""
+    bins: list[list] = []  # [bytes, chains]
+    for size, chain in sized:
+        for b in bins:
+            if b[0] + size <= budget:
+                b[0] += size
+                b[1].append(chain)
+                break
+        else:
+            bins.append([size, [chain]])
+    return [chains for _, chains in bins]
 
 
 def _load_dv(table_path: str, dv_rels) -> dict:
@@ -125,9 +168,10 @@ def _load_bucket(
         p = os.path.join(d, fn)
         tail = "/".join(p.split(os.sep)[-3:])
         marked = (dv_marks or {}).get(tail, ())
-        have = set(pq.ParquetFile(p).schema_arrow.names)
-        want = sorted({pc for pc in phys.values() if pc in have})
-        t = pq.read_table(p, columns=want)
+        with pq.ParquetFile(p) as f:
+            have = set(f.schema_arrow.names)
+            want = sorted({pc for pc in phys.values() if pc in have})
+            t = f.read(columns=want)
         for pos, r in enumerate(t.to_pylist()):
             row = {c: r.get(phys[c]) for c in columns}
             if pos in marked:
@@ -300,25 +344,26 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
                     (gen, commitlog.bucket_refs(cur, b))
                 )
             prev = cur
+        chains = [
+            (commitlog.bucket_refs(first, b), steps[b]) for b in sorted(steps)
+        ]
+        sized = [(_chain_bytes(self.path, *c), c) for c in chains]
         return [
             _CdfPartition(
-                self.path,
-                commitlog.bucket_refs(first, b),
-                steps[b],
-                self.columns,
-                self.preimages,
-                self.cmap,
+                self.path, packed, self.columns, self.preimages, self.cmap
             )
-            for b in sorted(steps)
+            for packed in _pack(sized, _PARTITION_BYTES)
         ]
 
     def read(self, partition: _CdfPartition):
-        cols, cmap = partition.columns, partition.colmap
-        old = _load_state(partition.table_path, partition.old_refs, cols, cmap)
-        for gen, refs in partition.steps:
-            new = _load_state(partition.table_path, refs, cols, cmap)
-            yield from _changes(old, new, cols, gen, partition.preimages)
-            old = new
+        path, cols = partition.table_path, partition.columns
+        cmap = partition.colmap
+        for old_refs, steps in partition.chains:
+            old = _load_state(path, old_refs, cols, cmap)
+            for gen, refs in steps:
+                new = _load_state(path, refs, cols, cmap)
+                yield from _changes(old, new, cols, gen, partition.preimages)
+                old = new
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable generation names; nothing to ack

@@ -604,6 +604,93 @@ def test_cdf_stream_fails_loudly_past_vacuum_horizon(spark, tmp_path):
         )
 
 
+def _cdf_table(spark, path, n_buckets, n_keys):
+    from huracan_spark.pipeline.silver import SilverTable
+
+    t = SilverTable(spark, path, n_buckets=n_buckets)
+    t.merge(
+        spark.createDataFrame(
+            [(f"k{i}", 1, False, i) for i in range(n_keys)],
+            "_id string, version_ long, deleted boolean, val long",
+        )
+    )
+    return t
+
+
+def _cdf_rows(reader, parts):
+    from collections import Counter
+
+    return Counter(row for p in parts for row in reader.read(p))
+
+
+def test_cdf_cow_commit_over_every_bucket_plans_one_partition(
+    spark, tmp_path
+):
+    """A Python data-source task costs a fixed slice of worker CPU
+    however little it reads, so a small batch's changed-bucket chains
+    pack into one partition instead of one per bucket."""
+    from huracan_spark.sources.silver_cdf_source import _SilverCdfStreamReader
+
+    t = _cdf_table(spark, str(tmp_path / "t"), 16, 200)
+    g1 = t.current_generation()
+    t.merge(
+        spark.createDataFrame(
+            [(f"k{i}", 2, False, -i) for i in range(200)],
+            "_id string, version_ long, deleted boolean, val long",
+        ),
+        write_mode="cow",
+    )
+    reader = _SilverCdfStreamReader(
+        {"path": t.path}, ["_id", "version_", "deleted", "val"]
+    )
+    parts = reader.partitions(
+        {"generation": g1}, {"generation": t.current_generation()}
+    )
+    assert len(parts) == 1
+    assert len(parts[0].chains) == 16
+    rows = _cdf_rows(reader, parts)
+    assert sum(rows.values()) == 200
+    assert {r[4] for r in rows} == {"update"}
+
+
+def test_cdf_partition_budget_splits_chains_without_changing_rows(
+    spark, tmp_path, monkeypatch
+):
+    """Under a 1-byte budget every chain is planned alone; the rows are
+    the packed plan's rows, as a multiset, across MOR, DV and COW
+    commits in one batch."""
+    import time as _time
+
+    from huracan_spark.sources import silver_cdf_source as cdf
+
+    t = _cdf_table(spark, str(tmp_path / "t"), 4, 40)
+    g1 = t.current_generation()
+    schema = "_id string, version_ long, deleted boolean, val long"
+    for mode, batch in (
+        ("mor", [(f"k{i}", 2, i % 3 == 0, i) for i in range(0, 40, 2)]),
+        ("cow", [(f"k{i}", 3, False, 7) for i in range(0, 40, 5)]),
+        ("mor", [("new", 1, False, 1), ("k1", 4, False, 1)]),
+    ):
+        _time.sleep(0.002)
+        t.merge(spark.createDataFrame(batch, schema), write_mode=mode)
+    _time.sleep(0.002)
+    t.delete_where([("val", "<", 5)], write_mode="dv")
+    reader = cdf._SilverCdfStreamReader(
+        {"path": t.path, "preimages": "true"},
+        ["_id", "version_", "deleted", "val"],
+    )
+    span = ({"generation": g1}, {"generation": t.current_generation()})
+    packed = reader.partitions(*span)
+    assert len(packed) == 1
+    monkeypatch.setattr(cdf, "_PARTITION_BYTES", 1)
+    alone = reader.partitions(*span)
+    assert len(alone) == len(packed[0].chains) == 4
+    assert all(len(p.chains) == 1 for p in alone)
+    assert any(len(p.chains[0][1]) > 1 for p in alone)  # multi-step chain
+    want = _cdf_rows(reader, packed)
+    assert want and _cdf_rows(reader, alone) == want
+
+
 def test_silver_cdf_max_generations_per_batch(spark, tmp_path):
     """Admission control (Delta maxFilesPerTrigger analog): a consumer
     whose trigger outpaces the table's commit rate catches up in
