@@ -157,6 +157,18 @@ def bucket_refs(r: Refs, bucket: str) -> tuple[str | None, list, list]:
     return r[0].get(bucket), r[1].get(bucket, []), r[2].get(bucket, [])
 
 
+def dir_files(path: str, rel: str) -> list[tuple[str, int]]:
+    """(file name, bytes) of the parquet files in one referenced data
+    or sidecar dir, in name order: exactly what a reader of ``rel``
+    reads."""
+    with os.scandir(os.path.join(path, rel)) as it:
+        return sorted(
+            (e.name, e.stat().st_size)
+            for e in it
+            if e.name.endswith(".parquet")
+        )
+
+
 def changed_buckets(old: Refs, new: Refs) -> list[str]:
     """Bucket ids whose base, deltas or dvs reference differs between
     two generations' refs.  Equal references prove equal bytes, so the

@@ -1575,13 +1575,10 @@ class SilverTable:
         entries = []
 
         def _list(rel: str, bucket: str, layer: str):
-            d = os.path.join(self.path, rel)
-            if not os.path.isdir(d):
+            if not os.path.isdir(os.path.join(self.path, rel)):
                 return
             per_file = fstats.get(bucket, {}) if layer == "base" else {}
-            for fn in sorted(os.listdir(d)):
-                if not fn.endswith(".parquet"):
-                    continue
+            for fn, size in commitlog.dir_files(self.path, rel):
                 st = per_file.get(fn)
                 rows = (
                     max((c.get("n_rows", 0) for c in st.values()), default=None)
@@ -1594,7 +1591,7 @@ class SilverTable:
                         bucket,
                         layer,
                         os.path.join(rel, fn),
-                        os.path.getsize(os.path.join(d, fn)),
+                        size,
                         rows,
                     )
                 )

@@ -83,12 +83,16 @@ def get_spark(
         # errors lose only the "line N in file" context line.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # The generated-class cache (default 100 entries) is smaller
-        # than one ingest pass's distinct plans, so chunk after chunk
-        # evicted and re-compiled the same classes with Janino: 6
-        # compiles in every warm repeat of a 3-chunk backfill pass,
-        # 0 at 4000 (JVM CPU per pass ~9.4 -> ~8.1 s on 4 vCPU).
-        .config("spark.sql.codegen.cache.maxEntries", "4000")
+        # The generated-class cache (default 100 entries, evicting per
+        # segment before it is full) is smaller than the ingest
+        # pipeline's distinct plans, so Janino re-compiled the same
+        # classes over and over: ~54 compiles in every repeat of a warm
+        # 3-chunk backfill pass (97 distinct entries), ~470 in 40 s of
+        # live ingest (~150 entries after set-up, then ~1 new one per
+        # second).  At 256: 0 and ~32, with least-recently-used
+        # eviction bounding a long-running stream.  Metaspace after GC
+        # read 162 / 176-178 MB at both sizes (4 vCPU).
+        .config("spark.sql.codegen.cache.maxEntries", "256")
         # TESTDATA events.parquet carries TIMESTAMP(NANOS) which Spark has
         # no native type for; read as long (ns) and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

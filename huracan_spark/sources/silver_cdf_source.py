@@ -63,9 +63,12 @@ _META_DDL = (
 )
 
 #: referenced file bytes one partition's chains may add up to (base +
-#: deltas + DV sidecars), Spark's ``spark.sql.files.maxPartitionBytes``
-#: default; a chain above it is planned alone
-_PARTITION_BYTES = 128 << 20
+#: deltas + DV sidecars); a chain above it is planned alone.  read()
+#: decodes every row into Python objects, serially: ~5-10 MB of
+#: referenced parquet per CPU second in-process and ~3 MB/s inside a
+#: worker (silver rows, preimages on, 4 vCPU), so a full partition
+#: reads for ~0.6 s, a few times the ~240 ms fixed cost of a task
+_PARTITION_BYTES = 2 << 20
 
 
 def _table_ddl(path: str) -> str:
@@ -95,22 +98,15 @@ class _CdfPartition(InputPartition):
         self.colmap = colmap  # logical -> physical (column mapping)
 
 
-def _chain_bytes(table_path: str, old_refs, steps) -> int:
-    """Bytes of the parquet files a chain references, each data or
-    sidecar dir counted once."""
-    rels = dict.fromkeys(
+def _chain_dirs(old_refs, steps) -> dict:
+    """The data and sidecar dirs a chain references, each once, in
+    order."""
+    return dict.fromkeys(
         rel
         for base, deltas, dvs in (old_refs, *(refs for _, refs in steps))
         for rel in (base, *deltas, *dvs)
         if rel is not None
     )
-    n = 0
-    for rel in rels:
-        with os.scandir(os.path.join(table_path, rel)) as it:
-            n += sum(
-                e.stat().st_size for e in it if e.name.endswith(".parquet")
-            )
-    return n
 
 
 def _pack(sized, budget: int) -> list[list]:
@@ -136,9 +132,7 @@ def _load_dv(table_path: str, dv_rels) -> dict:
     marks: dict = {}
     for rel in dict.fromkeys(dv_rels or ()):
         d = os.path.join(table_path, rel)
-        for fn in sorted(os.listdir(d)):
-            if not fn.endswith(".parquet"):
-                continue
+        for fn, _ in commitlog.dir_files(table_path, rel):
             t = pq.read_table(
                 os.path.join(d, fn), columns=["_dv_file", "_dv_pos"]
             )
@@ -162,9 +156,7 @@ def _load_bucket(
     phys = {c: (colmap.get(c, c) if colmap else c) for c in columns}
     out = {}
     d = os.path.join(table_path, rel)
-    for fn in sorted(os.listdir(d)):
-        if not fn.endswith(".parquet"):
-            continue
+    for fn, _ in commitlog.dir_files(table_path, rel):
         p = os.path.join(d, fn)
         tail = "/".join(p.split(os.sep)[-3:])
         marked = (dv_marks or {}).get(tail, ())
@@ -261,6 +253,8 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
         # depends on the cap.
         self.max_gens = int(options.get("max_generations_per_batch", "0"))
         self._pos: str | None = None
+        #: parquet bytes of each dir the last planned batch referenced
+        self._dir_bytes: dict[str, int] = {}
         # physical names are immutable, so the CURRENT generation's
         # column map, taken at stream start, decodes every generation
         cur = commitlog.current(self.path)
@@ -347,7 +341,20 @@ class _SilverCdfStreamReader(DataSourceStreamReader):
         chains = [
             (commitlog.bucket_refs(first, b), steps[b]) for b in sorted(steps)
         ]
-        sized = [(_chain_bytes(self.path, *c), c) for c in chains]
+        # committed dirs never change, so sizes listed for the previous
+        # batch carry over: a trigger lists only the dirs its new
+        # generations reference
+        known, self._dir_bytes = self._dir_bytes, {}
+        for rel in dict.fromkeys(r for c in chains for r in _chain_dirs(*c)):
+            self._dir_bytes[rel] = (
+                known[rel]
+                if rel in known
+                else sum(n for _, n in commitlog.dir_files(self.path, rel))
+            )
+        sized = [
+            (sum(self._dir_bytes[r] for r in _chain_dirs(*c)), c)
+            for c in chains
+        ]
         return [
             _CdfPartition(
                 self.path, packed, self.columns, self.preimages, self.cmap

@@ -690,6 +690,55 @@ def test_cdf_partition_budget_splits_chains_without_changing_rows(
     want = _cdf_rows(reader, packed)
     assert want and _cdf_rows(reader, alone) == want
 
+    def chain_bytes(chain):
+        return sum(reader._dir_bytes[r] for r in cdf._chain_dirs(*chain))
+
+    # between the two: the largest plus the smallest chain packs some
+    # chains together, and no partition goes over the budget
+    sizes = [chain_bytes(c) for c in packed[0].chains]
+    budget = max(sizes) + min(sizes)
+    monkeypatch.setattr(cdf, "_PARTITION_BYTES", budget)
+    some = reader.partitions(*span)
+    assert 1 < len(some) < len(alone)
+    assert all(sum(map(chain_bytes, p.chains)) <= budget for p in some)
+    assert _cdf_rows(reader, some) == want
+
+
+def test_cdf_planning_lists_only_the_new_generations_dirs(
+    spark, tmp_path, monkeypatch
+):
+    """Committed dirs never change, so a trigger sizes the dirs the
+    previous batch referenced from memory and lists only the new
+    ones; a fresh reader (a restart) lists all of them."""
+    from huracan_spark.pipeline import commitlog
+    from huracan_spark.sources.silver_cdf_source import _SilverCdfStreamReader
+
+    t = _cdf_table(spark, str(tmp_path / "t"), 4, 40)
+    gens = [t.current_generation()]
+    schema = "_id string, version_ long, deleted boolean, val long"
+    for v in (2, 3):
+        t.merge(
+            spark.createDataFrame([("k1", v, False, v)], schema),
+            write_mode="mor",
+        )
+        gens.append(t.current_generation())
+    listed = []
+    real = commitlog.dir_files
+    monkeypatch.setattr(
+        commitlog, "dir_files", lambda p, rel: listed.append(rel) or real(p, rel)
+    )
+    cols = ["_id", "version_", "deleted", "val"]
+    reader = _SilverCdfStreamReader({"path": t.path}, cols)
+    off = [{"generation": g} for g in gens]
+    assert len(reader.partitions(off[0], off[1])) == 1
+    assert len(listed) == 2  # k1's base and its first delta
+    listed.clear()
+    reader.partitions(off[1], off[2])
+    assert len(listed) == 1 and listed[0].startswith(gens[2])
+    listed.clear()
+    _SilverCdfStreamReader({"path": t.path}, cols).partitions(off[1], off[2])
+    assert len(listed) == 3
+
 
 def test_silver_cdf_max_generations_per_batch(spark, tmp_path):
     """Admission control (Delta maxFilesPerTrigger analog): a consumer
